@@ -1,8 +1,8 @@
 """Deduplication operators for large-scale text corpora.
 
 Beyond the reference's DISTINCT (U2, glue.py:178), a training-data
-pipeline needs near-duplicate detection. All hot-path work here stays
-JVM-side with built-in functions:
+pipeline needs near-duplicate detection. The distributed plans here use
+built-in functions only:
 
 - exact dedup: hash-groupBy keeping a deterministic representative
 - shingling: k-gram shingles via ``transform(sequence(...))`` (no UDF)
@@ -14,13 +14,44 @@ Scale: the LSH path is the 100 TB story — candidate generation is a
 groupBy on (band, band_hash) buckets instead of an O(N^2) cross join;
 the exact-Jaccard verify touches only candidate pairs. Skewed buckets
 (boilerplate docs) are bounded by ``max_bucket_size``.
+
+Small corpora: ``minhash_dedup_pairs`` takes its distributed plan only
+when the corpus frame's plan-time size estimate exceeds
+``spark.sql.autoBroadcastJoinThreshold`` — the rule Spark itself uses
+to collect a join side to the driver (frames without file statistics,
+such as local lists and RDDs, always exceed it). At or below it the
+function runs its jobs AT CALL TIME (shingles plus their hashes,
+collected through Arrow; then the band keys of the collected
+signatures), finishes on the driver with bit-identical numpy ports of
+Spark's long/int hashes (extensions.driverside) and returns the same
+rows as a local relation, pinning nothing. SCALE.md records the
+crossover.
 """
 
 from __future__ import annotations
 
+import functools
+from itertools import combinations, product
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
+from aws_imdb_data_pipeline_spark.extensions.driverside import (
+    SPARK_HASH_SEED,
+    fits_driver,
+    xxh64_int,
+    xxh64_long,
+)
 from aws_imdb_data_pipeline_spark.operators.topk import top_n_per_group
 
 # Shingle frames persisted inside lazily-returned pipelines
@@ -396,7 +427,19 @@ def minhash_dedup_pairs(
     MEMORY_AND_DISK (the default StorageLevel here) and expect it to
     be ~corpus-sized. The pin's lifetime is caller-owned (the returned
     frame is lazy) — long-lived sessions should call
-    :func:`release_pinned_shingles` after consuming the result."""
+    :func:`release_pinned_shingles` after consuming the result.
+
+    A corpus that fits the driver (:func:`driverside.fits_driver` — at
+    most ``spark.sql.autoBroadcastJoinThreshold`` by plan-time estimate)
+    with an integral or string id runs :func:`_minhash_pairs_on_driver`
+    instead: its Spark jobs run at call time, the same rows come
+    back as a local relation, and nothing is pinned."""
+    # ids the driver orders exactly as Spark does (id_a < id_b)
+    id_type = docs.schema[id_col].dataType
+    if (isinstance(id_type, IntegralType) or id_type == StringType()) and fits_driver(docs):
+        return _minhash_pairs_on_driver(
+            docs, id_col, text_col, k, num_hashes, bands, threshold
+        )
     rows_per_band = num_hashes // bands
     # A single-file source arrives as 1 partition; fan out so shingling
     # and hashing use the whole cluster (cheap: rows are narrow text).
@@ -407,6 +450,113 @@ def minhash_dedup_pairs(
     pairs = lsh_candidate_pairs(sig, id_col, "__sig", bands, rows_per_band)
     verified = jaccard_on_shingles(pairs, sh, id_col, "__shingles")
     return verified.filter(F.col("jaccard") >= threshold)
+
+
+def _minhash_pairs_on_driver(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_bucket_size: int = 1000,
+) -> DataFrame:
+    """:func:`minhash_dedup_pairs` for a corpus that fits the driver:
+    the same rows, from two Spark jobs.
+
+    The first job is :func:`shingle_docs` plus the per-shingle
+    ``xxhash64``, collected through Arrow. The rest follows the
+    distributed plan step by step: the per-seed hash
+    ``xxhash64(__h, lit(s))`` is ``hashInt(s, hashLong(__h, 42))`` in
+    numpy, signatures are signed per-seed minimums per id (rows sharing
+    an id share one signature), the second job runs :func:`band_buckets`
+    over the collected signatures as a local relation, buckets of 2 to
+    ``max_bucket_size`` ids pair as ``id_a < id_b`` (a NULL id counts
+    toward its bucket but never pairs), and every candidate pair is
+    verified row by row with exact Jaccard ``|a ∩ b| / |a ∪ b|``."""
+    rows_per_band = num_hashes // bands
+    t = shingle_docs(docs, id_col, text_col, k=k).select(
+        F.col(id_col),
+        "__shingles",
+        F.transform("__shingles", lambda x: F.xxhash64(x)).alias("__hs"),
+    ).toArrow()
+    code: dict = {}
+    row_code = np.fromiter(
+        (code.setdefault(i, len(code)) for i in t.column(0).to_pylist()),
+        dtype=np.int64, count=t.num_rows,
+    )
+    id_of = list(code)
+    pairs: set[tuple[int, int]] = set()
+    if id_of:
+        hs = t.column(2).combine_chunks()
+        owner = np.repeat(row_code, pc.list_value_length(hs).to_numpy())
+        order = np.argsort(owner, kind="stable")
+        starts = np.flatnonzero(np.r_[True, np.diff(owner[order]) != 0])
+        # a shingle shared by many documents is seed-hashed once
+        h1, inv = np.unique(
+            xxh64_long(hs.flatten().to_numpy(), SPARK_HASH_SEED), return_inverse=True
+        )
+        inv = inv[order]
+        sig = np.stack(
+            [np.minimum.reduceat(xxh64_int(s, h1)[inv], starts) for s in range(num_hashes)],
+            axis=1,
+        )
+        # band keys: Spark's own banding kernel over the collected
+        # signatures, so each bucket is the distributed plan's
+        sig_rows = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)),
+            pa.array(sig.ravel()),
+        )
+        keyed = band_buckets(
+            docs.sparkSession.createDataFrame(
+                pa.table({"__id": np.arange(len(id_of)), "__sig": sig_rows})
+            ),
+            "__id", "__sig", bands, rows_per_band,
+        ).toArrow()
+        member, band, bucket = (keyed.column(c).to_numpy() for c in ("__id", "band", "bucket"))
+        by_bucket = np.lexsort((bucket, band))
+        new_bucket = (np.diff(band[by_bucket]) != 0) | (np.diff(bucket[by_bucket]) != 0)
+        edges = np.flatnonzero(np.r_[True, new_bucket, True])
+        size = np.diff(edges)
+        for e in np.flatnonzero((size >= 2) & (size <= max_bucket_size)).tolist():
+            in_bucket = member[by_bucket[edges[e] : edges[e + 1]]].tolist()
+            live = [m for m in in_bucket if id_of[m] is not None]
+            for a, b in combinations(live, 2):
+                pairs.add((a, b) if id_of[a] < id_of[b] else (b, a))
+    rows_of: list[list[int]] = [[] for _ in id_of]
+    for r, c in enumerate(row_code.tolist()):
+        rows_of[c].append(r)
+    grams = t.column(1).combine_chunks()
+
+    @functools.cache
+    def shingle_set(r: int) -> frozenset:
+        return frozenset(grams[r].as_py())
+
+    out_a, out_b, out_j = [], [], []
+    for a, b in pairs:
+        for sa, sb in product(map(shingle_set, rows_of[a]), map(shingle_set, rows_of[b])):
+            inter = len(sa & sb)
+            jac = inter / (len(sa) + len(sb) - inter)
+            if jac >= threshold:
+                out_a.append(id_of[a])
+                out_b.append(id_of[b])
+                out_j.append(jac)
+    id_field = docs.schema[id_col]
+    id_arrow = t.schema.field(0).type
+    table = pa.table({
+        "id_a": pa.array(out_a, id_arrow),
+        "id_b": pa.array(out_b, id_arrow),
+        "jaccard": pa.array(out_j, pa.float64()),
+    })
+    schema = StructType([
+        StructField("id_a", id_field.dataType, id_field.nullable),
+        StructField("id_b", id_field.dataType, id_field.nullable),
+        StructField("jaccard", DoubleType(), True),
+    ])
+    # an Arrow table plans as a LocalRelation: evaluating it starts no
+    # Python worker
+    return docs.sparkSession.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -23,12 +23,29 @@ Scale shape (the part that matters at 100 TB):
   query batch pays only the broadcast probe + one (query, doc)
   aggregate. Pass the artifact via ``corpus=`` to get that path;
   crossover measured in SCALE.md §25.
+
+Small corpora: on the ``corpus=`` path, ``bm25_topk`` takes its
+distributed plan when the posting frames' plan-time size estimate
+exceeds ``spark.sql.autoBroadcastJoinThreshold`` — the rule Spark
+itself uses to collect a join side to the driver — or when the batch
+has more than CLUSTER_FLOOR_ROWS candidate rows, the count at which the
+distributed plan's own large-candidate regimes begin. Otherwise the
+function runs its jobs AT CALL TIME (the distinct query terms and the
+vocabulary with its idf, then the posting frame with its tf norm, each
+collected once through Arrow), ranks on the driver and returns the
+same rows as a local relation. SCALE.md records the crossover.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+from aws_imdb_data_pipeline_spark.extensions.driverside import fits_driver
 
 
 def _tokens(text_col: str) -> "F.Column":
@@ -130,6 +147,26 @@ def bm25_cluster_parts(
     return int(min(2000, max(width, cand_rows // _GROUPS_PER_PART)))
 
 
+def _bm25_idf() -> "F.Column":
+    # over (__n, __df)
+    return F.log(
+        F.lit(1.0)
+        + (F.col("__n") - F.col("__df") + F.lit(0.5))
+        / (F.col("__df") + F.lit(0.5))
+    )
+
+
+def _bm25_tf_norm(k1: float, b: float) -> "F.Column":
+    # over (__tf, __dl, __avgdl)
+    return (
+        F.col("__tf") * F.lit(k1 + 1.0)
+    ) / (
+        F.col("__tf")
+        + F.lit(k1)
+        * (F.lit(1.0 - b) + F.lit(b) * F.col("__dl") / F.col("__avgdl"))
+    )
+
+
 def bm25_scores(
     tf: DataFrame,
     dfreq: DataFrame,
@@ -173,18 +210,7 @@ def bm25_scores(
         posting = posting.withColumns(
             {"__n": F.lit(int(n_docs)), "__avgdl": F.lit(float(avgdl))}
         )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("__n") - F.col("__df") + F.lit(0.5))
-        / (F.col("__df") + F.lit(0.5))
-    )
-    tf_norm = (
-        F.col("__tf") * F.lit(k1 + 1.0)
-    ) / (
-        F.col("__tf")
-        + F.lit(k1)
-        * (F.lit(1.0 - b) + F.lit(b) * F.col("__dl") / F.col("__avgdl"))
-    )
+    idf, tf_norm = _bm25_idf(), _bm25_tf_norm(k1, b)
     # The per-row BM25 weight depends ONLY on posting-side columns
     # (queries carry qtf=1 by the distinct-terms convention), so
     # compute it ONCE per posting row, below the query join — not
@@ -291,11 +317,22 @@ def bm25_topk(
     (tf, dfreq, (n_docs, avgdl)) — the token-stats-artifact serve
     path (extensions.tokenindex): persisted posting frames + exact
     marker scalars, so a query batch never re-tokenizes the corpus.
-    ``exclude_self`` drops the qid==doc_id posting rows before the
-    aggregate — hard-negative mining (the gold document must not
+    Posting frames at or below ``spark.sql.autoBroadcastJoinThreshold``
+    are ranked on the driver at call time when the batch has at most
+    CLUSTER_FLOOR_ROWS candidate rows (:func:`_bm25_topk_on_driver`,
+    same rows). ``exclude_self`` drops the qid==doc_id posting rows
+    before the aggregate — hard-negative mining (the gold document must not
     appear in its own negative list)."""
     if corpus is not None:
         tf, dfreq, stats = corpus
+        small = cand_rows is None or cand_rows <= CLUSTER_FLOOR_ROWS
+        if small and not isinstance(stats, DataFrame) and fits_driver(tf, dfreq):
+            top = _bm25_topk_on_driver(
+                tf, dfreq, stats, queries, id_col, qid_col, qtext_col,
+                k, k1, b, round_to, exclude_self,
+            )
+            if top is not None:
+                return top
     else:
         tf, dfreq, stats = bm25_corpus(docs, id_col, text_col)
     scored = bm25_scores(
@@ -317,3 +354,96 @@ def bm25_topk(
         keep_rank=True,
     )
     return top.select(qid_col, "rank", id_col, "score")
+
+
+def _bm25_topk_on_driver(
+    tf: DataFrame,
+    dfreq: DataFrame,
+    stats: tuple[int, float],
+    queries: DataFrame,
+    id_col: str,
+    qid_col: str,
+    qtext_col: str,
+    k: int,
+    k1: float,
+    b: float,
+    round_to: int,
+    exclude_self: bool,
+) -> DataFrame | None:
+    """:func:`bm25_topk` over posting frames that fit the driver: the
+    same rows, ranked in numpy.
+
+    Three collects, each through Arrow: the distinct query terms
+    (:func:`bm25_qterms`, so tokenisation stays in Spark and the query
+    frame is evaluated once), the vocabulary with its ``idf`` and df,
+    and the posting frame with its ``tf_norm`` — both factors computed
+    by the same Spark expressions as :func:`bm25_scores`, so each is
+    the same double. The driver multiplies them per posting row
+    (``idf * tf_norm``) and sums per (query, doc); Spark's ``round``
+    runs over those sums as a local relation, and the driver ranks by
+    (score desc, doc id). Returns None (the caller then runs the
+    distributed plan) when an id or a weight is NULL, or when the batch
+    has more than CLUSTER_FLOOR_ROWS candidate rows (Σ df over the
+    distinct (query, term) pairs, :func:`bm25_candidate_rows`): the
+    driver holds a few int64 arrays of that length."""
+    spark = tf.sparkSession
+    n_docs, avgdl = stats
+    q = bm25_qterms(queries, qid_col, qtext_col).toArrow()
+    voc = dfreq.withColumn("__n", F.lit(int(n_docs))).select(
+        "__t", _bm25_idf().alias("__x"), "__df"
+    ).toArrow()
+    # query terms -> vocabulary positions (the inner join on __t)
+    vt = pc.index_in(q.column(1), voc.column(0))
+    qkeep = np.flatnonzero(pc.is_valid(vt).to_numpy(zero_copy_only=False))
+    q_term = vt.to_numpy(zero_copy_only=False)[qkeep].astype(np.int64)
+    if voc.column(2).to_numpy(zero_copy_only=False)[q_term].sum() > CLUSTER_FLOOR_ROWS:
+        return None
+    post = tf.withColumn("__avgdl", F.lit(float(avgdl))).select(
+        F.col(id_col), "__t", _bm25_tf_norm(k1, b).alias("__x")
+    ).toArrow()
+    if any(c.null_count for c in (q.column(0), post.column(0), post.column(2), voc.column(1))):
+        return None
+    pt = pc.index_in(post.column(1), voc.column(0))
+    pkeep = np.flatnonzero(pc.is_valid(pt).to_numpy(zero_copy_only=False))
+    p_term = pt.to_numpy(zero_copy_only=False)[pkeep].astype(np.int64)
+    qids = q.column(0).to_numpy(zero_copy_only=False)[qkeep]
+    docs = post.column(0).to_numpy(zero_copy_only=False)[pkeep]
+    w = voc.column(1).to_numpy()[p_term] * post.column(2).to_numpy()[pkeep]
+    # candidates: every posting row of each query term
+    by_term = np.argsort(p_term, kind="stable")
+    lo = np.searchsorted(p_term[by_term], q_term, "left")
+    n = np.searchsorted(p_term[by_term], q_term, "right") - lo
+    cq = np.repeat(np.arange(q_term.size), n)
+    cp = by_term[np.repeat(lo - np.cumsum(n) + n, n) + np.arange(int(n.sum()))]
+    if exclude_self:
+        keep = qids[cq] != docs[cp]
+        cq, cp = cq[keep], cp[keep]
+    uq, qc = np.unique(qids, return_inverse=True)
+    ud, dc = np.unique(docs, return_inverse=True)
+    group, gi = np.unique(qc[cq] * ud.size + dc[cp], return_inverse=True)
+    sums = pa.table({"s": np.bincount(gi, weights=w[cp], minlength=group.size)})
+    score = (
+        spark.createDataFrame(sums).select(F.round("s", round_to)).toArrow().column(0).to_numpy()
+    )
+    gq, gd = group // ud.size, group % ud.size
+    # sorted unique codes order like the ids: rank by (score desc, doc id)
+    order = np.lexsort((gd, -score, gq))
+    gq, gd, score = gq[order], gd[order], score[order]
+    first = np.flatnonzero(np.r_[True, np.diff(gq) != 0])
+    rank = np.arange(gq.size) - np.repeat(first, np.diff(np.r_[first, gq.size])) + 1
+    top = rank <= k
+    table = pa.table({
+        qid_col: pa.array(uq[gq[top]], q.schema.field(0).type),
+        "rank": pa.array(rank[top], pa.int32()),
+        id_col: pa.array(ud[gd[top]], post.schema.field(0).type),
+        "score": pa.array(score[top], pa.float64()),
+    })
+    schema = StructType([
+        StructField(qid_col, queries.schema[qid_col].dataType, True),
+        StructField("rank", IntegerType(), False),
+        StructField(id_col, tf.schema[id_col].dataType, True),
+        StructField("score", DoubleType(), True),
+    ])
+    # an Arrow table plans as a LocalRelation: evaluating it starts no
+    # Python worker
+    return spark.createDataFrame(table, schema)

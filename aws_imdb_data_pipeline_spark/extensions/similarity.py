@@ -19,7 +19,6 @@ the same banding idea as MinHash-LSH but for cosine space.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 from pyspark.sql import Column, DataFrame
@@ -656,10 +655,6 @@ def semantic_dedup(
     # added cost is chunk-count copies of the (tiny) per-cell vectors
     # through the exchange.
     width = assigned.sparkSession.sparkContext.defaultParallelism
-    try:
-        override = int(os.environ.get("SPARK_GRAFT_CELL_SALT_CHUNKS", "0"))
-    except ValueError:
-        override = 0  # bad override falls back to auto, never crashes
     # Chunk count is DATA-adaptive when the caller supplies ``n_rows``
     # (an estimate/upper bound is fine — the footer row count the plan
     # callers already have): chunks = estimated per-cell pairs / 20k,
@@ -674,9 +669,7 @@ def semantic_dedup(
     # wide cluster with few cells (width 2048, n_lists 4 -> 1024
     # chunks) that bloats the plan for diminishing returns; 64 bounds
     # per-cell task work at 1/64th of a cell.
-    if override > 0:
-        chunks = max(1, override)
-    elif n_rows is not None:
+    if n_rows is not None:
         per_cell_pairs = (n_rows / max(n_lists, 1)) ** 2 / 2.0
         chunks = min(64, max(1, math.ceil(per_cell_pairs / 20_000.0)))
     else:

@@ -11,6 +11,7 @@ from aws_imdb_data_pipeline_spark.extensions import (
     shingle_docs,
 )
 from aws_imdb_data_pipeline_spark.extensions.textstats import fingerprint
+from tests.driver_paths import distributed_twin
 
 
 def test_exact_dedup_deterministic_survivor(spark):
@@ -46,8 +47,16 @@ def _corpus(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_minhash_finds_planted_near_dups(spark):
-    docs = _corpus(spark)
+def _as_parquet(df, tmp_path):
+    """``df`` read back from parquet: a frame with file statistics, so
+    the MinHash kernel may take its driver-side path."""
+    path = str(tmp_path / "corpus.parquet")
+    df.write.parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def test_minhash_finds_planted_near_dups(spark, tmp_path):
+    docs = _as_parquet(_corpus(spark), tmp_path)
     pairs = minhash_dedup_pairs(
         docs, "doc_id", "text", k=3, num_hashes=64, bands=16, threshold=0.5
     ).collect()
@@ -60,8 +69,8 @@ def test_minhash_finds_planted_near_dups(spark):
     assert not any(a >= 1 and a < 20 and b >= 1 and b < 20 for a, b in found)
 
 
-def test_lsh_no_false_positives_vs_bruteforce(spark):
-    docs = _corpus(spark)
+def test_lsh_no_false_positives_vs_bruteforce(spark, tmp_path):
+    docs = _as_parquet(_corpus(spark), tmp_path)
     sh = shingle_docs(docs, "doc_id", "text", k=3)
     a = sh.selectExpr("doc_id as id_a", "__shingles as sh_a")
     b = sh.selectExpr("doc_id as id_b", "__shingles as sh_b")
@@ -344,14 +353,14 @@ def test_simhash_served_from_artifact_equals_inline(
     assert served == inline
 
 
-def test_short_docs_emit_no_shingles_and_never_pair(spark):
+def test_short_docs_emit_no_shingles_and_never_pair(spark, tmp_path):
     """Docs with fewer than k words have an empty shingle set (standard
     w-shingling) — a pair of 2-word duplicates must NOT near-dup pair,
     matching the exact full-k-gram oracle (round-10 advice: the old
     sequence(0, greatest(n-k, 0)) emitted one PARTIAL gram)."""
     from aws_imdb_data_pipeline_spark.extensions import shingle
 
-    docs = spark.createDataFrame(
+    docs = _as_parquet(spark.createDataFrame(
         [
             (1, "tiny doc"),
             (2, "tiny doc"),
@@ -359,7 +368,7 @@ def test_short_docs_emit_no_shingles_and_never_pair(spark):
             (4, "exactly three words"),
         ],
         ["doc_id", "text"],
-    )
+    ), tmp_path)
     sh = shingle_docs(docs, "doc_id", "text", k=3)
     ids = {r.doc_id for r in sh.collect()}
     assert ids == {3, 4}  # sub-k docs dropped entirely
@@ -452,3 +461,22 @@ def test_band_index_deletion_equals_rebuild(spark, tmp_path):
     assert sorted(map(tuple, filtered.collect())) == sorted(
         map(tuple, rebuilt.collect())
     )
+
+
+# The one-shot, index and incremental MinHash tests again, on the
+# distributed plan (the runs above take the driver-side path).
+test_minhash_finds_planted_near_dups_distributed = distributed_twin(
+    test_minhash_finds_planted_near_dups
+)
+test_lsh_no_false_positives_vs_bruteforce_distributed = distributed_twin(
+    test_lsh_no_false_positives_vs_bruteforce
+)
+test_short_docs_emit_no_shingles_and_never_pair_distributed = distributed_twin(
+    test_short_docs_emit_no_shingles_and_never_pair
+)
+test_incremental_near_dup_matches_batch_path_distributed = distributed_twin(
+    test_incremental_near_dup_matches_batch_path
+)
+test_minhash_pairs_from_index_equals_one_shot_distributed = distributed_twin(
+    test_minhash_pairs_from_index_equals_one_shot
+)

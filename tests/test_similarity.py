@@ -524,19 +524,21 @@ def test_semantic_dedup_salt_invariant(spark, monkeypatch):
         rows.append((i + 1000, [x + rng.gauss(0, 0.005) for x in v]))
     vecs = spark.createDataFrame(rows, ["vec_id", "embedding"])
 
-    def run(chunks: str):
-        monkeypatch.setenv("SPARK_GRAFT_CELL_SALT_CHUNKS", chunks)
+    def run(n_rows: int):
+        # the chunk count is ceil((n_rows / n_lists)^2 / 2 / 20k): the
+        # row estimate 240 gives 1 chunk, 1300 gives 3, 2200 gives 8
         return {
             r.id: (r.component, r.is_survivor)
             for r in semantic_dedup(
-                vecs, "vec_id", "embedding", threshold=0.98, n_lists=4
+                vecs, "vec_id", "embedding", threshold=0.98, n_lists=4,
+                n_rows=n_rows,
             ).collect()
         }
 
-    unsalted = run("1")
+    unsalted = run(240)
     assert len(unsalted) == 240
-    for chunks in ("3", "8"):
-        assert run(chunks) == unsalted
+    for n_rows in (1300, 2200):
+        assert run(n_rows) == unsalted
 
 
 def test_cluster_balanced_sample_cap_and_determinism(spark, sf_dir):

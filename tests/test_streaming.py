@@ -12,6 +12,7 @@ from aws_imdb_data_pipeline_spark.streaming import (
     stream_events_from_dir,
     tumbling_counts,
 )
+from tests.driver_paths import distributed_twin
 
 
 def _run_stream_to_memory(spark, stream_df, name):
@@ -738,6 +739,12 @@ def test_stream_bm25_topk_matches_batch_serve(spark, sf_dir, tmp_path):
     }
     assert got == want
     assert got_df.select("batch_id").distinct().count() >= 2
+
+
+# ... and again on the distributed BM25 plan
+test_stream_bm25_topk_matches_batch_serve_distributed = distributed_twin(
+    test_stream_bm25_topk_matches_batch_serve
+)
 
 
 def _delete_commit(ckpt: str, batch_id: int) -> None:

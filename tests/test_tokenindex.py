@@ -16,6 +16,7 @@ from aws_imdb_data_pipeline_spark.extensions.tokenindex import (
     token_stats,
 )
 from aws_imdb_data_pipeline_spark.plans.registry import REGISTRY
+from tests.driver_paths import distributed_twin
 
 
 def test_artifact_builds_once_and_reuses(spark, sf_dir, tmp_path, monkeypatch):
@@ -112,6 +113,16 @@ def test_rrf_fuses_both_lists(spark, sf_dir):
             assert scores == sorted(scores, reverse=True)
     finally:
         fused.unpersist()
+
+
+# The BM25 serve-path tests again, on the distributed plan (the runs
+# above take the driver-side path).
+test_hard_negatives_exclude_gold_distributed = distributed_twin(
+    test_hard_negatives_exclude_gold
+)
+test_rrf_fuses_both_lists_distributed = distributed_twin(
+    test_rrf_fuses_both_lists
+)
 
 
 def test_vocab_coverage_is_monotone_cdf(spark, sf_dir):
