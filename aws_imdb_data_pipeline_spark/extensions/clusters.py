@@ -194,9 +194,9 @@ def connected_components_stars(
     Beyond", 2014) — the algorithm GraphX/GraphFrames use.
 
     Why it exists next to :func:`connected_components`: min-label
-    propagation needs DIAMETER-many iterations, and the cc scale probe
-    (tools/cc_scale_probe.py) measured exactly that — 24 iterations for
-    a graph with chains of length 24, at every size. Star contraction
+    propagation needs DIAMETER-many iterations, and a scale run measured
+    exactly that — 24 iterations for a graph with chains of length 24,
+    at every size. Star contraction
     halves path lengths every round, so rounds grow with log² of the
     component size: the same chains converge in ~5 rounds. At 100 TB an
     iteration is a full shuffle of the edge set; 5 beats 24.

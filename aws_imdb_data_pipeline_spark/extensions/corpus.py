@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from aws_imdb_data_pipeline_spark.extensions.textstats import _words
+from aws_imdb_data_pipeline_spark.session import widen
 
 # ---------------------------------------------------------------------------
 # Deterministic dataset splits
@@ -286,10 +287,11 @@ def contamination_overlap(
     from aws_imdb_data_pipeline_spark.extensions.dedup import shingle_docs
 
     # Widen the corpus leg when its scan is narrower than the session
-    # (r15 stage dump: ONE 1-task stage of ~2.0 s CPU was the whole
-    # query) — the widened plan still has exactly one corpus exchange,
-    # now carrying doc rows instead of exploded shingle rows.
-    corpus = _widen_if_narrow(corpus, id_col)
+    # (a single 1-task stage of shingling was the whole query) — the
+    # widened plan still has exactly one corpus exchange, now carrying
+    # doc rows instead of exploded shingle rows. Keyed on the doc id so
+    # downstream per-doc aggregates reuse the exchange.
+    corpus = widen(corpus, id_col)
     key = (lambda c: F.xxhash64(c)) if hash_shingles else (lambda c: c)
     c_sh = (
         shingle_docs(corpus, id_col, text_col, k=k)
@@ -586,22 +588,6 @@ def hot_shingles(
     )
 
 
-def _widen_if_narrow(df: DataFrame, key: str) -> DataFrame:
-    """Repartition ``df`` by ``key`` to the session width ONLY when its
-    scan arrives narrower than the session (the tokenindex
-    ``_posting_scan`` self-disabling policy): a single-file lake scans
-    as 1-2 tasks and every shingle/explode/aggregate pass downstream
-    serializes on them. Keyed on the doc id so downstream per-doc
-    aggregates reuse the exchange (Generate and broadcast probes
-    preserve the child partitioning). A corpus big enough to scan wide
-    is untouched at any scale."""
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < width:
-        return df.repartition(width, key)
-    return df
-
-
 def _hot_shingle_positions(
     docs: DataFrame,
     id_col: str,
@@ -654,11 +640,11 @@ def dup_span_coverage_metric(
     :func:`hot_shingles` — at scale, a persisted per-corpus-version
     artifact): with it the dominant shingle transform runs ONCE per
     call instead of twice."""
-    # widen ONLY the shingle leg (r15 stage dump: a 2-task 1.3 s-CPU
-    # shingle stage was the query); the base leg is a cheap per-doc
-    # projection and keeps the narrow scan
+    # widen ONLY the shingle leg (on a narrow scan the 2-task shingle
+    # stage was the query); the base leg is a cheap per-doc projection
+    # and keeps the narrow scan
     sh, hot = _hot_shingle_positions(
-        _widen_if_narrow(docs, id_col), id_col, text_col, k, min_docs, hot
+        widen(docs, id_col), id_col, text_col, k, min_docs, hot
     )
     dup = (
         sh.join(hot, "__sh", "left_semi")
@@ -720,9 +706,9 @@ def trim_duplicated_spans(
     hot-shingle set (one shingle pass instead of two — see
     :func:`hot_shingles`)."""
     # widen the two expensive legs (the shingle pass and the word_rows
-    # posexplode — r15: 2-task 1.4 s-CPU stages on the narrow scan);
-    # the trailing id-only select keeps the narrow scan
-    docs_w = _widen_if_narrow(docs, id_col)
+    # posexplode run as 2-task stages on a narrow scan); the trailing
+    # id-only select keeps the narrow scan
+    docs_w = widen(docs, id_col)
     sh, hot = _hot_shingle_positions(
         docs_w, id_col, text_col, k, min_docs, hot
     )

@@ -53,6 +53,7 @@ from aws_imdb_data_pipeline_spark.extensions.driverside import (
     xxh64_long,
 )
 from aws_imdb_data_pipeline_spark.operators.topk import top_n_per_group
+from aws_imdb_data_pipeline_spark.session import widen
 
 # Shingle frames persisted inside lazily-returned pipelines
 # (minhash_dedup_pairs, minhash_pairs_from_index). The returned frame
@@ -698,22 +699,18 @@ def minhash_pairs_from_index(
     # shingle table: the verify join consumes it on BOTH pair sides,
     # and shingle construction dominates when candidates are wide
     # (degenerate-vocabulary regime: touched ≈ corpus — measured 6.4 s
-    # unpersisted vs 2.4 s persisted at 51k docs, tools/
-    # serving_dedup_probe.py; a single-reference explode/groupBy verify
-    # measured no better than 2-ref, the compute is the shingling).
+    # unpersisted vs 2.4 s persisted at 51k docs; a single-reference
+    # explode/groupBy verify measured no better than 2-ref, the compute
+    # is the shingling).
     # Size ∝ candidate docs; MEMORY_AND_DISK default at cluster scale.
     # Caller-owned pin: release via release_pinned_shingles() in
     # long-lived sessions (round-10 advice — the lazy return means the
     # pin cannot be dropped here without re-shingling per consumer).
-    shing_src = docs.join(touched, id_col, "left_semi")
-    # Widen ONLY when the corpus scan is narrower than the session: a
-    # single-file lake table arrives as one scan task and serializes
-    # the verify shingle pass (~2.3 s of CPU on 1 task at sf0.1 — r15
-    # stage dump); a corpus big enough to scan wide is left alone (the
-    # guard self-disables, same policy as tokenindex._posting_scan).
-    width = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < width:
-        shing_src = shing_src.repartition(width, id_col)
+    # A narrow corpus scan (one task for a single-file lake table) would
+    # serialize the verify shingle pass, so widen it; the optimizer
+    # pushes the semi join below the repartition, so the exchange still
+    # carries only the touched docs.
+    shing_src = widen(docs, id_col).join(touched, id_col, "left_semi")
     sh = _pin(shingle_docs(shing_src, id_col, text_col, k=meta["k"]))
     verified = jaccard_on_shingles(pairs, sh, id_col, "__shingles")
     return verified.filter(F.col("jaccard") >= threshold)

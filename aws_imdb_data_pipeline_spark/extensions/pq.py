@@ -145,7 +145,7 @@ def pq_encode(
     ``impl="pandas"`` (default): Arrow-batched numpy kernel — the
     argmin over k centroids per subspace is a (batch × k) matrix
     expression, exactly the shape where a vectorized Pandas UDF beats
-    SQL expressions. Measured at 200k×64-dim (tools/pq_scale_probe):
+    SQL expressions. Measured at 200k×64-dim:
     the SQL forms are either interpreted (HOF: ~490 s build) or a
     janino-limit codegen fallback (unrolled literals); the numpy
     kernel does the same pass in a fraction of that (SCALE.md §11).

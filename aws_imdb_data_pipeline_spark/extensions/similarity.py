@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aws_imdb_data_pipeline_spark.operators.topk import top_n_per_group
+from aws_imdb_data_pipeline_spark.session import widen
 
 
 def _to_double(col: Column | str) -> Column:
@@ -78,9 +79,7 @@ def cosine_topk(
         F.col(id_col).alias("neighbor_id"), _to_double(vec_col).alias("c_vec")
     )
     if widen_stream:
-        width = candidates.sparkSession.sparkContext.defaultParallelism
-        if candidates.rdd.getNumPartitions() < width:
-            c = c.repartition(width)
+        c = widen(c)
     c = c.withColumn("c_norm", F.sqrt(_dot(F.col("c_vec"), F.col("c_vec"))))
 
     joined = c.crossJoin(F.broadcast(q))
@@ -406,20 +405,21 @@ def embedding_near_dup_pairs(
     vec_col: str,
     threshold: float = 0.4,
     round_to: int | None = 4,
-    stream_width: int | None = None,
+    widen_stream: bool = False,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with cosine >= threshold — brute-force
     O(N^2) baseline for embedding-level dedup.
 
-    ``stream_width`` widens the STREAM side of the cross join only
-    (the ``id_a`` leg the N^2 dot products are distributed over): a
-    narrow scan (single-file corpus -> 1 task) serializes the whole
-    kernel, but repartitioning the *input* widens both legs and the
-    planner's broadcast build then pays a round-robin exchange —
-    sort-before-repartition + a full shuffle write/read — only to be
-    collected whole into one broadcast relation (r15 measured: the
-    stream-only form removes that exchange and runs ~25% faster at
-    sf0.1, identical row set). The build leg reads the scan directly.
+    ``widen_stream`` widens the STREAM side of the cross join only
+    (the ``id_a`` leg the N^2 dot products are distributed over) when
+    its scan is narrower than the session: a narrow scan (single-file
+    corpus -> 1 task) serializes the whole kernel, but repartitioning
+    the *input* widens both legs and the planner's broadcast build then
+    pays a round-robin exchange — sort-before-repartition + a full
+    shuffle write/read — only to be collected whole into one broadcast
+    relation (the stream-only form removes that exchange and measured
+    ~25% faster at sf0.1, identical row set). The build leg reads the
+    scan directly.
 
     Scale path: at N where N^2 is prohibitive, bucket by
     ``random_hyperplane_buckets`` first and run this within buckets
@@ -428,7 +428,7 @@ def embedding_near_dup_pairs(
     """
     base = df.select(F.col(id_col).alias("__id"), _to_double(vec_col).alias("__v"))
     base = base.withColumn("__n", F.sqrt(_dot(F.col("__v"), F.col("__v"))))
-    a_src = base.repartition(stream_width) if stream_width else base
+    a_src = widen(base) if widen_stream else base
     a = a_src.select(
         F.col("__id").alias("id_a"), F.col("__v").alias("va"), F.col("__n").alias("na")
     )
@@ -564,8 +564,8 @@ def embedding_near_dup_pairs_lsh(
     if kw:
         # hash on the first verify-join key with an explicit count: in
         # the broadcast regime this pins the verify stage's width (it
-        # would otherwise byte-coalesce to ~5 tasks for 4+ s of CPU —
-        # measured r15, plans/r15/embedding_near_dup_lsh_*); in the
+        # would otherwise byte-coalesce to ~5 tasks for 4+ s of CPU,
+        # measured on embedding_near_dup_lsh); in the
         # sort-merge regime (corpus too big to broadcast) the join
         # reuses this exchange outright, so the shuffle is never wasted
         cand = cand.repartition(kw, "id_a")

@@ -196,9 +196,9 @@ def token_stats(
         # these posting frames are the SCAN INPUT of the BM25 candidate
         # explosion, whose stage width equals the scan's split count —
         # a single-file single-row-group artifact serialized the 240 MB
-        # explode stage onto 2 tasks (bm25_zipf_retrieval 7 s -> 34 s,
-        # OPTIMIZATION_r14.md). Many ~core-count files are the RIGHT
-        # layout for a frame consumed by compute-amplifying scans.
+        # explode stage onto 2 tasks (bm25_zipf_retrieval 7 s -> 34 s).
+        # Many ~core-count files are the RIGHT layout for a frame
+        # consumed by compute-amplifying scans.
         # parallel_write (r15) enforces it: AQE's byte heuristic still
         # coalesced the 16 MB tfl to 8 files, capping every consumer's
         # pre-exchange scan stage at 8 tasks.

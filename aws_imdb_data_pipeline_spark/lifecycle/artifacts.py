@@ -87,16 +87,16 @@ def sized_write(spark, advisory: str = "64m"):
     """Scope for artifact/lake WRITES: let AQE coalesce the final
     stage by ADVISORY SIZE instead of parallelism.
 
-    The session default keeps ``parallelismFirst=true`` (and r14
-    lowers ``minPartitionSize`` to 64k) because COMPUTE stages in this
-    engine are often compute-dense at tiny byte sizes — but that same
-    setting makes a write stage emit one small file per core-sized
-    sliver (guide §6's small-files problem twice over: driver listing
-    on every later read, per-file open cost on every scan task, and
-    here each tiny artifact file also becomes its own Python-boundary
-    task in the pandas-kernel serve paths). Inside this scope the
-    write stage coalesces to ~``advisory`` bytes per output file;
-    everything outside is untouched. Restores prior conf on exit."""
+    The session default keeps ``parallelismFirst=true`` because
+    COMPUTE stages in this engine are often compute-dense at tiny byte
+    sizes — but that same setting makes a write stage emit one small
+    file per core-sized sliver (guide §6's small-files problem twice
+    over: driver listing on every later read, per-file open cost on
+    every scan task, and here each tiny artifact file also becomes its
+    own Python-boundary task in the pandas-kernel serve paths). Inside
+    this scope the write stage coalesces to ~``advisory`` bytes per
+    output file; everything outside is untouched. Restores prior conf
+    on exit."""
     pf = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     adv = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     # get(k, None) is None when the key was never explicitly SET (the

@@ -132,8 +132,8 @@ def qgram_edit_join(
     sorts by. Losslessness holds for ANY total order, but selectivity
     does not: a q-gram occurring in every string (think the ``" v"``
     in "… v12" version suffixes) sorts into every lexicographic prefix
-    and collapses the blocking to all-pairs — measured exactly so in
-    tools/fuzzy_join_probe.py before this default. ``"auto"`` (default)
+    and collapses the blocking to all-pairs — measured exactly so
+    before this default. ``"auto"`` (default)
     aggregates gram frequencies over both inputs (one cheap pass — the
     gram vocabulary is at most |charset|^q) and sorts prefixes
     rare-first, the ED-Join ordering. Pass a (gram, gram_df) frame to

@@ -406,9 +406,9 @@ def dedup_minhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Widen the truth leg's shingle pass: a single-file corpus arrives
     # as ONE scan task, serializing ~2.3 s of shingle+hash CPU — twice,
     # because the eager pairs_est job and the lazy truth leg each
-    # evaluate it (r15 stage dump: two 1-task/2.3 s-CPU stages
-    # dominating the check's wall). Scale-safe: the stratum bounds this
-    # frame at ~TRUTH_DOC_CAP docs at ANY corpus size, so pinning its
+    # evaluate it (two 1-task/2.3 s-CPU stages dominated the check's
+    # wall). Scale-safe: the stratum bounds this frame at
+    # ~TRUTH_DOC_CAP docs at ANY corpus size, so pinning its
     # width to the session's parallelism can never under-split a big
     # scan (the serve leg below is untouched).
     docs_t = docs_t.repartition(
@@ -1198,7 +1198,7 @@ def ann_ivf_incremental_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Serving-twin digest oracles (round 12, r11 next-round #8): the
 # bm25_zipf_retrieval_digest pattern applied to the four remaining
 # deterministic serving twins. Each twin's output is a pure function
-# of (corpus, seed, params) — verified by tools/digest_probe.py across
+# of (corpus, seed, params) — its digest was verified equal across
 # parallelism settings AND across fresh artifact rebuilds (k-means
 # included) — so its digest pins as literals. Twins read the sf-dir
 # corpus, so the literals are keyed by a CONTENT FINGERPRINT of the
@@ -1355,7 +1355,7 @@ def rrf_hybrid_ivf_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # content-fingerprint pinning applied to the three remaining
 # deterministic k-means-cell consumers. Each is a pure function of
 # (embeddings corpus, seed) served from the shared assignment
-# artifact; tools/digest_probe.py verified their digests invariant to
+# artifact; their digests were verified invariant to
 # parallelism AND to a fresh artifact rebuild before pinning. The xor
 # column is exhaustive over the full output rows, so a single moved
 # vector, changed cell, flipped survivor, or drifted cap flips it.
@@ -1383,7 +1383,7 @@ _ARTIFACT_DIGEST_SPECS: dict[str, tuple[tuple[str, str], ...]] = {
 _ARTIFACT_DIGEST_PINS: dict[str, dict[int, tuple[int, ...]]] = {
     # measured on the shipped lakes (sf0.001 / sf0.01 / sf0.1),
     # cross-checked at two parallelism settings and a fresh artifact
-    # rebuild by tools/digest_probe.py --artifact
+    # rebuild
     "embedding_cluster_sizes": {
         _FP_SF0_001: (16, 500, -3739096468448527177),
         _FP_SF0_01: (16, 500, -726853067796033207),

@@ -36,6 +36,7 @@ from aws_imdb_data_pipeline_spark.plans.fingerprints import (
     pinned_case_oracle,
 )
 from aws_imdb_data_pipeline_spark.plans.registry import register
+from aws_imdb_data_pipeline_spark.session import widen
 from aws_imdb_data_pipeline_spark.sources.tables import (
     load_table,
     table_col_max,
@@ -389,15 +390,13 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth past sf1 (200M pairs in ~25 s) where the unnest form blew
     the 300 s sweep timeout at generated sf0.3+."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # Stream-side-only width (r15): repartitioning `emb` here widened
-    # BOTH cross-join legs, and the broadcast build leg paid a full
+    # Stream-side-only width: repartitioning `emb` here widened BOTH
+    # cross-join legs, and the broadcast build leg paid a full
     # round-robin exchange just to be collected into one relation.
     # Widening only the stream leg inside the kernel removes that
-    # exchange (plans/r15/embedding_near_dup_{before,after}.txt) —
-    # identical row set, ~25% faster at sf0.1.
+    # exchange — identical row set, ~25% faster at sf0.1.
     return embedding_near_dup_pairs(
-        emb, "vec_id", "embedding", threshold=0.4,
-        stream_width=spark.sparkContext.defaultParallelism,
+        emb, "vec_id", "embedding", threshold=0.4, widen_stream=True
     )
 
 
@@ -611,14 +610,13 @@ def multimodal_doc_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Proves schema/batching/UDF signature against SQL semantics
     (payload hash is engine-specific and excluded here)."""
     from aws_imdb_data_pipeline_spark.extensions.multimodal import extract_features
-    from aws_imdb_data_pipeline_spark.plans.extensions6 import (
-        _widen_media,
-    )
 
     # row-aware widen (gradient_png_media pattern): parallelize the
     # Arrow decode kernel across Python workers
-    docs = _widen_media(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir
+    docs = widen(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        rows=table_rows(sf_dir, "documents"),
     )
     media = docs.select(
         F.col("doc_id").alias("media_id"),
@@ -672,14 +670,12 @@ def multimodal_wav_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    from aws_imdb_data_pipeline_spark.plans.extensions6 import (
-        _widen_media,
-    )
-
     # row-aware widen (gradient_png_media pattern): parallelize the
     # WAV encode + feature-extraction kernels across Python workers
-    docs = _widen_media(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir
+    docs = widen(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        rows=table_rows(sf_dir, "documents"),
     )
     media = docs.select(
         F.col("doc_id").alias("media_id"),

@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 from aws_imdb_data_pipeline_spark.operators.localframe import local_literal_frame
 from aws_imdb_data_pipeline_spark.plans.registry import register
 from aws_imdb_data_pipeline_spark.plans.relational import stable_avg
-from aws_imdb_data_pipeline_spark.sources.tables import load_table, maybe_broadcast
+from aws_imdb_data_pipeline_spark.session import widen
+from aws_imdb_data_pipeline_spark.sources.tables import (
+    load_table,
+    maybe_broadcast,
+    table_rows,
+)
 
 
 def _distinct_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -52,7 +57,7 @@ def fuzzy_name_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's nested-loop answer while the plan joins on
     (gram, occurrence) equi-keys. At a 10^8-name vocabulary the cross
     join is 10^16 pairs, the blocked join is candidates only
-    (measured in tools/fuzzy_join_probe.py; SCALE.md §30)."""
+    (SCALE.md §30)."""
     from aws_imdb_data_pipeline_spark.operators.fuzzyjoin import (
         qgram_edit_join,
     )
@@ -256,33 +261,6 @@ def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return psi_ks_from_cells(cells, "event_type", n_bins=_PSI_BINS)
 
 
-def _widen_media(
-    docs: DataFrame,
-    spark: SparkSession,
-    sf_dir: str,
-    bound: int | None = None,
-) -> DataFrame:
-    """Row-aware widen for media-synthesis frames: a single-file lake
-    scans as 1 task and serializes the encode kernel AND every chained
-    decode kernel downstream on one Python worker — but each Python
-    task also has a fixed worker round-trip cost, so tiny frames must
-    NOT fan to session width (measured: the 500-doc ahash_neardup
-    slice regressed 1.9 -> 3.4 s under a blanket 32-way widen). Width
-    = clamp(rows/128, 1, parallelism), rows from the parquet footer
-    (``bound`` caps it when the caller slices by id before encoding).
-    A corpus that already scans wider is untouched at any scale."""
-    from aws_imdb_data_pipeline_spark.sources.tables import table_rows
-
-    n = table_rows(sf_dir, "documents")
-    if bound is not None:
-        n = min(n, bound)
-    width = spark.sparkContext.defaultParallelism
-    parts = max(1, min(width, n // 128))
-    if parts > 1 and docs.rdd.getNumPartitions() < parts:
-        return docs.repartition(parts, "doc_id")
-    return docs
-
-
 def gradient_png_media(
     spark: SparkSession, sf_dir: str, max_id: int | None = None
 ) -> DataFrame:
@@ -311,14 +289,18 @@ def gradient_png_media(
 
         return texts.map(build)
 
-    # r15 stage dump: 1.2 s of Python-worker dwell on 1 task, 0.15 s
-    # JVM CPU — widen row-aware (see _widen_media). ``max_id`` lets
-    # sliced consumers (ahash_neardup's doc_id < 500 oracle slice)
-    # apply the bound BEFORE the widen so the width fits the slice.
+    # On a 1-task scan the encode is Python-worker dwell on one task —
+    # widen row-aware, with rows from the parquet footer: tiny frames
+    # must not fan out (the 500-doc ahash_neardup slice regressed
+    # 1.9 -> 3.4 s under a blanket 32-way widen). ``max_id`` lets sliced
+    # consumers (ahash_neardup's doc_id < 500 oracle slice) apply the
+    # bound BEFORE the widen so the width fits the slice.
     docs = load_table(spark, sf_dir, "documents")
+    rows = table_rows(sf_dir, "documents")
     if max_id is not None:
         docs = docs.filter(F.col("doc_id") < max_id)
-    docs = _widen_media(docs, spark, sf_dir, bound=max_id)
+        rows = min(rows, max_id)
+    docs = widen(docs, "doc_id", rows=rows)
     return docs.select(
         F.col("doc_id").alias("media_id"), to_png("text").alias("payload")
     )
@@ -414,8 +396,10 @@ def gradient_fpk_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # same row-aware widen as gradient_png_media: parallelize the PNG
     # encode + downstream frame-sample/hash kernels across workers
-    docs = _widen_media(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir
+    docs = widen(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        rows=table_rows(sf_dir, "documents"),
     )
     return docs.select(
         F.col("doc_id").alias("media_id"),

@@ -16,7 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_imdb_data_pipeline_spark.plans.registry import register
-from aws_imdb_data_pipeline_spark.sources.tables import load_table, maybe_broadcast
+from aws_imdb_data_pipeline_spark.session import widen
+from aws_imdb_data_pipeline_spark.sources.tables import (
+    load_table,
+    maybe_broadcast,
+    table_rows,
+)
 
 # (applicationId, documents path, mtime_ns, size) -> fitted quality
 # PipelineModel. Same contract as plans.fingerprints._FP_CACHE: an
@@ -567,14 +572,12 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    from aws_imdb_data_pipeline_spark.plans.extensions6 import (
-        _widen_media,
-    )
-
     # row-aware widen (gradient_png_media pattern): parallelize the
     # WAV encode + decode/fingerprint kernels across Python workers
-    docs = _widen_media(
-        load_table(spark, sf_dir, "documents"), spark, sf_dir
+    docs = widen(
+        load_table(spark, sf_dir, "documents"),
+        "doc_id",
+        rows=table_rows(sf_dir, "documents"),
     )
     media = docs.select(
         F.col("doc_id").alias("media_id"), to_wav("text").alias("payload")

@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CONF: dict[str, str] = {
     # Runtime re-planning: coalesce small shuffles, split skewed joins,
@@ -23,25 +23,12 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # AQE coalescing minPartitionSize stays at Spark's 1 MB default.
-    # Round 14 lowered it to 64 KB session-wide to widen the
-    # compute-dense candidate-pair kernels (which carry kilobytes of
-    # ids/vectors per second of compute), but with
-    # ``parallelismFirst=true`` the coalesce target is
-    # ``max(bytes/defaultParallelism, minPartitionSize)`` — so the 64 KB
-    # floor fanned EVERY tiny-shuffle stage (global aggs, rollups,
-    # sessionization windows, final top-k exchanges) to ~core-count
-    # tasks, and per-task fixed cost made wall time GROW with core
-    # count (driver r14: dq_profile_union_approx 0.63 s @8c vs 3.78 s
-    # @32c, headline geomean 0.85x). Small-intermediate stages exist at
-    # every scale, so this is not a local-mode artifact. The kernels
-    # that genuinely need width now pin it explicitly with
-    # scale-adaptive repartitions at the candidate-pair boundary
-    # (similarity.py, OPTIMIZATION_r15.md) instead of a byte heuristic.
-    # Env knob kept for A/B sweeps only.
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-        "SPARK_GRAFT_MIN_PARTITION_SIZE", "1048576"
-    ),
+    # AQE coalescing minPartitionSize stays at Spark's 1 MB default: a
+    # lower floor fans every tiny-shuffle stage (global aggregates,
+    # rollups, final top-k exchanges) out to ~core-count tasks, whose
+    # per-task fixed cost made wall time grow with core count. Operators
+    # that need width ask for it with ``widen`` below.
+
     # Bounded output files (reference: glue.py:35).
     "spark.sql.files.maxRecordsPerFile": "5000000",
     # Idempotent run_date replacement (replaces the reference's
@@ -187,3 +174,23 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def widen(df: DataFrame, *keys: str, rows: int | None = None) -> DataFrame:
+    """Repartition a frame that scans narrower than the session.
+
+    A single-file lake table scans as one or two tasks, and every
+    shingle, explode or Python-UDF pass downstream then runs on them.
+    The target is the session width, or ``clamp(rows // 128, 1, width)``
+    when ``rows`` is given: each Python task has a fixed worker
+    round-trip cost, so a few hundred rows are not worth fanning out.
+    The frame is hash-partitioned on ``keys`` (round-robin without
+    keys) only when the target exceeds 1 and its partition count. A
+    frame that already scans at least that wide comes back unchanged,
+    so the rule disables itself at scale.
+    """
+    width = df.sparkSession.sparkContext.defaultParallelism
+    parts = width if rows is None else max(1, min(width, rows // 128))
+    if parts > 1 and df.rdd.getNumPartitions() < parts:
+        return df.repartition(parts, *keys)
+    return df

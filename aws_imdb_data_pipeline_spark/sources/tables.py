@@ -266,16 +266,9 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
 # shipped lakes every gated dimension is far under it, so bench plans
 # are unchanged; on the generated decades the gate flips customer
 # (233 MB) and part (154 MB) to AQE at sf100 while supplier (16 MB)
-# keeps the hint. Override with $SPARK_GRAFT_BROADCAST_BYTES for A/B.
+# keeps the hint.
 # ---------------------------------------------------------------------------
 DEFAULT_DIM_BROADCAST_BYTES = 32 << 20
-
-
-def _broadcast_bytes_budget() -> int:
-    try:
-        return int(os.environ["SPARK_GRAFT_BROADCAST_BYTES"])
-    except (KeyError, ValueError):
-        return DEFAULT_DIM_BROADCAST_BYTES
 
 
 def table_bytes(
@@ -357,8 +350,8 @@ def maybe_broadcast(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
        order_part_names' 66 MB name projection likewise; the full
        part frame at ~150 MB+ stays with AQE — exactly the §55
        measured win/loss split). Both facts scale with the one
-       $SPARK_GRAFT_BROADCAST_BYTES knob."""
-    budget = _broadcast_bytes_budget()
+       DEFAULT_DIM_BROADCAST_BYTES budget."""
+    budget = DEFAULT_DIM_BROADCAST_BYTES
     if table_bytes(sf_dir, name, spark=df.sparkSession) <= budget:
         return F.broadcast(df)
     est = _plan_size_bytes(df)

@@ -13,6 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from aws_imdb_data_pipeline_spark.sources import tables
 from aws_imdb_data_pipeline_spark.sources.tables import (
     DEFAULT_DIM_BROADCAST_BYTES,
     load_table,
@@ -48,7 +49,7 @@ def test_gate_hints_below_budget(spark, sf_dir):
 
 
 def test_gate_defers_to_aqe_above_budget(spark, sf_dir, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_BYTES", "0")
+    monkeypatch.setattr(tables, "DEFAULT_DIM_BROADCAST_BYTES", 0)
     part = load_table(spark, sf_dir, "part")
     ungated = maybe_broadcast(part, sf_dir, "part")
     li = load_table(spark, sf_dir, "lineitem")
@@ -67,7 +68,7 @@ def test_both_regimes_same_rows(name, spark, sf_dir, monkeypatch):
     assert "ResolvedHint" in _analyzed(hinted), "gate must hint here"
     want = sorted(map(tuple, hinted.collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_BYTES", "0")
+    monkeypatch.setattr(tables, "DEFAULT_DIM_BROADCAST_BYTES", 0)
     unhinted = REGISTRY[name].fn(spark, sf_dir)
     assert "ResolvedHint" not in _analyzed(unhinted)
     assert sorted(map(tuple, unhinted.collect())) == want
@@ -139,7 +140,7 @@ def test_plan_estimate_recovers_filtered_build_side(
     # does not) and the full frame's estimate stays over 4x it
     budget = est // 4 + 1
     assert budget < base
-    monkeypatch.setenv("SPARK_GRAFT_BROADCAST_BYTES", str(budget))
+    monkeypatch.setattr(tables, "DEFAULT_DIM_BROADCAST_BYTES", budget)
     li = load_table(spark, sf_dir, "orders")
     hinted = li.join(
         maybe_broadcast(slim, sf_dir, "customer"),

@@ -181,26 +181,3 @@ def test_weighted_sample_without_replacement_bias_and_quota(spark):
     sizes = {r.g: r.n for r in per.groupBy("g").agg(
         F.count(F.lit(1)).alias("n")).collect()}
     assert sizes == {0: 7, 1: 7, 2: 7}
-
-
-def test_widen_if_narrow_widens_narrow_scans_only(spark):
-    """_widen_if_narrow fans a narrower-than-session frame out to the
-    session width keyed on the id (so downstream per-doc aggregates
-    reuse the exchange) and leaves an already-wide frame untouched —
-    the scale guard: a 100 TB corpus that scans wide gets no extra
-    exchange."""
-    from pyspark.sql import functions as F
-
-    from aws_imdb_data_pipeline_spark.extensions.corpus import (
-        _widen_if_narrow,
-    )
-
-    width = spark.sparkContext.defaultParallelism
-    narrow = spark.range(100).coalesce(1).withColumn("t", F.lit("x"))
-    widened = _widen_if_narrow(narrow, "id")
-    assert widened.rdd.getNumPartitions() == width
-    assert "RepartitionByExpression" in widened._jdf.queryExecution().optimizedPlan().toString()
-    assert sorted(r.id for r in widened.collect()) == list(range(100))
-
-    wide = spark.range(100, numPartitions=width).withColumn("t", F.lit("x"))
-    assert _widen_if_narrow(wide, "id") is wide

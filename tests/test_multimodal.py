@@ -360,40 +360,3 @@ def test_audio_fingerprint_integer_bits_and_poison(spark):
     assert got[1] == (8, 0b1100, 2)
     assert got[2] == got[1]
     assert got[3] == (None, None, None)
-
-
-def test_widen_media_is_row_aware(spark, sf_dir):
-    """The media-synth widen (plans.extensions6._widen_media) scales
-    its fan-out with the row count: full session width for the whole
-    corpus, a small width for a bounded slice (a blanket 32-way fan of
-    the 500-doc ahash_neardup slice measured 1.9 -> 3.4 s — fixed
-    Python-task cost), and identity when the frame already scans at
-    least that wide."""
-    from aws_imdb_data_pipeline_spark.plans.extensions6 import _widen_media
-    from aws_imdb_data_pipeline_spark.sources.tables import (
-        load_table,
-        table_rows,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    n = table_rows(sf_dir, "documents")
-    width = spark.sparkContext.defaultParallelism
-
-    wide = _widen_media(docs, spark, sf_dir)
-    want = max(1, min(width, n // 128))
-    if want > 1:
-        assert wide.rdd.getNumPartitions() == want
-    else:
-        assert wide is docs
-
-    sliced = _widen_media(docs, spark, sf_dir, bound=500)
-    want_sliced = max(1, min(width, min(n, 500) // 128))
-    if want_sliced > 1:
-        assert sliced.rdd.getNumPartitions() == want_sliced
-        assert want_sliced < width
-    else:
-        assert sliced is docs
-
-    # already-wide frames are untouched (the scale guard)
-    already = docs.repartition(width)
-    assert _widen_media(already, spark, sf_dir) is already

@@ -84,20 +84,21 @@ def test_embedding_near_dup_pairs(spark):
 
 
 def test_embedding_near_dup_pairs_stream_width(spark):
-    """``stream_width`` widens only the STREAM leg of the cross join:
+    """``widen_stream`` widens only the STREAM leg of the cross join:
     the broadcast build leg must not pay a round-robin exchange just
-    to be collected into one relation (the r15 waste: repartitioning
-    the shared input put an exchange under BOTH legs). Plan fact: one
-    RoundRobinPartitioning exchange exactly, on the stream side; the
-    pair set is identical to the unwidened form."""
+    to be collected into one relation (the waste of repartitioning
+    the shared input: an exchange under BOTH legs). Plan fact: one
+    RoundRobinPartitioning exchange exactly, on the stream side of a
+    narrow (single-partition) input; the pair set is identical to the
+    unwidened form."""
     from aws_imdb_data_pipeline_spark.extensions import embedding_near_dup_pairs
 
     vecs = spark.createDataFrame(
         [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(40)],
         ["vec_id", "embedding"],
-    )
+    ).coalesce(1)
     wide = embedding_near_dup_pairs(
-        vecs, "vec_id", "embedding", 0.9, stream_width=4
+        vecs, "vec_id", "embedding", 0.9, widen_stream=True
     )
     plan = wide._jdf.queryExecution().executedPlan().toString()
     assert plan.count("RoundRobinPartitioning") == 1
