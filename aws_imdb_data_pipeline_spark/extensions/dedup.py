@@ -579,8 +579,9 @@ def build_minhash_band_index(
     dedup shape: the corpus is minhashed exactly once per version;
     each arriving batch probes the index (broadcast of the batch's
     bands) instead of re-banding 100 TB per batch. Returns meta."""
-    import json as _json
     import os as _os
+
+    from aws_imdb_data_pipeline_spark.lifecycle.artifacts import write_json
 
     rows_per_band = num_hashes // bands
     sh = shingle_docs(docs, id_col, text_col, k=k)
@@ -607,22 +608,16 @@ def build_minhash_band_index(
         "id_col": id_col,
         "fingerprint": fingerprint,
     }
-    tmp = _os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(path, "meta.json"))
+    write_json(_os.path.join(path, "meta.json"), meta)
     return meta
 
 
 def read_band_index_meta(path: str) -> dict | None:
-    import json as _json
     import os as _os
 
-    try:
-        with open(_os.path.join(path, "meta.json")) as f:
-            return _json.load(f)
-    except (OSError, ValueError):
-        return None
+    from aws_imdb_data_pipeline_spark.lifecycle.artifacts import read_json
+
+    return read_json(_os.path.join(path, "meta.json"))
 
 
 def minhash_pairs_from_index(

@@ -158,24 +158,12 @@ def build_ivf_index(
 
 
 def _read_appends_marker(path: str) -> list[int]:
-    import json as _json
     import os as _os
 
-    try:
-        with open(_os.path.join(path, "_appends.json")) as f:
-            return list(_json.load(f)["batches"])
-    except (OSError, ValueError, KeyError):
-        return []
+    from aws_imdb_data_pipeline_spark.lifecycle.artifacts import read_json
 
-
-def _write_appends_marker(path: str, batches: list[int]) -> None:
-    import json as _json
-    import os as _os
-
-    tmp = _os.path.join(path, "_appends.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump({"batches": batches}, f)
-    _os.replace(tmp, _os.path.join(path, "_appends.json"))
+    meta = read_json(_os.path.join(path, "_appends.json")) or {}
+    return list(meta.get("batches", []))
 
 
 # Committed-batch count past which ivf_append warns to rebuild: each
@@ -471,6 +459,8 @@ def ivf_append(
     import os as _os
     import warnings as _warnings
 
+    from aws_imdb_data_pipeline_spark.lifecycle.artifacts import write_json
+
     with _appends_lock(path):
         committed = _read_appends_marker(path)
         n = (max(committed) + 1) if committed else 0
@@ -480,7 +470,9 @@ def ivf_append(
         ).write.mode("overwrite").partitionBy("__list").parquet(
             _os.path.join(path, "appends", f"b={n}")
         )
-        _write_appends_marker(path, committed + [n])
+        write_json(
+            _os.path.join(path, "_appends.json"), {"batches": committed + [n]}
+        )
         if len(committed) + 1 >= APPEND_COMPACT_THRESHOLD:
             _warnings.warn(
                 f"ivf_append: {len(committed) + 1} committed batches at "

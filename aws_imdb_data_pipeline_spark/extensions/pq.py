@@ -41,7 +41,6 @@ tiny driver-side codebook):
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -51,6 +50,10 @@ from pyspark.sql import functions as F
 
 from aws_imdb_data_pipeline_spark.extensions.ivf import build_ivf_assignments
 from aws_imdb_data_pipeline_spark.extensions.similarity import _dot, _to_double
+from aws_imdb_data_pipeline_spark.lifecycle.artifacts import (
+    read_json,
+    write_json,
+)
 from aws_imdb_data_pipeline_spark.operators.localframe import local_literal_frame
 from aws_imdb_data_pipeline_spark.operators.topk import top_n_per_group
 
@@ -253,27 +256,21 @@ def build_pq_index(
         # count, free at build time
         "n_vectors": candidates.count(),
     }
-    tmp = os.path.join(path, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "meta.json"))
+    write_json(os.path.join(path, "meta.json"), meta)
     return meta
 
 
 def load_pq_index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
-    with open(os.path.join(path, "meta.json")) as f:
-        meta = json.load(f)
+    meta = read_pq_index_meta(path)
+    if meta is None:
+        raise FileNotFoundError(f"no readable PQ index meta under {path}")
     return spark.read.parquet(os.path.join(path, "vectors")), meta
 
 
 def read_pq_index_meta(path: str) -> dict | None:
     """meta.json if the index at ``path`` exists and is readable
     (None otherwise) — the staleness probe for ensure-style callers."""
-    try:
-        with open(os.path.join(path, "meta.json")) as f:
-            return json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
+    return read_json(os.path.join(path, "meta.json"))
 
 
 def _serve(

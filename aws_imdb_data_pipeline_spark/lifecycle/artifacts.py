@@ -24,6 +24,10 @@ on directory existence alone). This module is the single copy:
   returns. A crashed/partial build leaves no marker, so the next
   caller rebuilds instead of serving garbage — the completion-marker
   property every builder now inherits.
+- :func:`write_json` / :func:`read_json` — the tmp + rename JSON write
+  and the missing-or-torn-is-None read behind every marker in the
+  engine: artifact and index metas, the ingest ``latest`` pointer and
+  control files, run manifests and the stream state markers.
 
 Artifacts live under ``$SPARK_GRAFT_ARTIFACTS`` (default
 ``<repo>/.artifacts``), keyed ``<kind>/<sf-dir-basename>`` and rebuilt
@@ -145,26 +149,51 @@ def source_fingerprint(sources: list[str] | str, params: dict) -> str:
     return hashlib.sha256(";".join(parts).encode()).hexdigest()[:16]
 
 
-def read_artifact_meta(path: str) -> dict | None:
-    """_meta.json if present and parseable, else None (== stale).
+def read_json(file: str):
+    """The parsed JSON at ``file``, or None when it is missing or torn.
 
-    Underscore-prefixed so Spark's file listing skips it when the
-    artifact's parquet files live at the path root (events_clustered)."""
+    Every commit marker in the engine is read through here, so "no
+    marker" and "unreadable marker" mean the same thing everywhere:
+    nothing was committed."""
     try:
-        with open(os.path.join(path, "_meta.json")) as f:
+        with open(file) as f:
             return json.load(f)
     except (OSError, ValueError):
         return None
 
 
-def write_artifact_meta(path: str, meta: dict) -> None:
-    """Atomic marker write (tmp + rename): readers see either the old
-    complete meta or the new complete meta, never a torn file."""
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, "_meta.json.tmp")
+def write_json(file: str, obj) -> None:
+    """Atomic JSON write (tmp + rename): readers see either the old
+    complete file or the new complete file, never a torn one. The one
+    commit primitive behind every marker, pointer and manifest."""
+    os.makedirs(os.path.dirname(file) or ".", exist_ok=True)
+    tmp = file + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, "_meta.json"))
+        json.dump(obj, f)
+    os.replace(tmp, file)
+
+
+def dir_bytes(path: str) -> int:
+    """On-disk bytes of a file or a directory tree (0 when missing) —
+    a stat walk, no data read."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+def read_artifact_meta(path: str) -> dict | None:
+    """_meta.json if present and parseable, else None (== stale).
+
+    Underscore-prefixed so Spark's file listing skips it when the
+    artifact's parquet files live at the path root (events_clustered)."""
+    return read_json(os.path.join(path, "_meta.json"))
 
 
 def ensure_artifact(
@@ -194,7 +223,7 @@ def ensure_artifact(
     extra = build(path, fp)
     if extra is not None:
         meta = {"fingerprint": fp, "params": dict(params), **extra}
-        write_artifact_meta(path, meta)
+        write_json(os.path.join(path, "_meta.json"), meta)
     else:
         meta = reader(path)
         if meta is None or meta.get("fingerprint") != fp:

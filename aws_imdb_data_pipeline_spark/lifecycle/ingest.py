@@ -14,17 +14,19 @@ HTTP/S3 client with the same two-phase HEAD→GET shape.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from aws_imdb_data_pipeline_spark.lifecycle.artifacts import (
+    read_json,
+    write_json,
+)
 from aws_imdb_data_pipeline_spark.lifecycle.runs import (
     RunManifest,
     content_changed,
     md5_file,
-    write_control,
     write_manifest,
 )
 
@@ -84,13 +86,15 @@ def ingest_datasets(
                 size += len(chunk)
         shutil.move(tmp, dest)
         digest = md5_file(dest, chunk_size)
-        write_control(ctl, meta)  # download complete + hashed: now commit
+        write_json(ctl, meta)  # download complete + hashed: now commit
         manifest.record(name, "downloaded", md5=digest, size=size)
         statuses[name] = "downloaded"
         # latest pointer: consumers read {lake}/{name}/latest to find
         # the current slice without listing run_date dirs
-        with open(os.path.join(lake_root, name, "latest"), "w") as f:
-            json.dump({"run_date": run_date, "path": dest_dir}, f)
+        write_json(
+            os.path.join(lake_root, name, "latest"),
+            {"run_date": run_date, "path": dest_dir},
+        )
 
     run_dir = os.path.join(lake_root, f"_runs/run_date={run_date}")
     manifest_path = write_manifest(manifest, run_dir)
@@ -101,5 +105,8 @@ def ingest_datasets(
 
 def latest_slice(lake_root: str, dataset: str) -> str:
     """Resolve the current slice directory via the latest pointer."""
-    with open(os.path.join(lake_root, dataset, "latest")) as f:
-        return json.load(f)["path"]
+    pointer = os.path.join(lake_root, dataset, "latest")
+    latest = read_json(pointer)
+    if latest is None:
+        raise FileNotFoundError(f"no readable latest pointer at {pointer}")
+    return latest["path"]

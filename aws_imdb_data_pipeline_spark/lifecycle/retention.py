@@ -25,6 +25,8 @@ from __future__ import annotations
 import os
 import shutil
 
+from aws_imdb_data_pipeline_spark.lifecycle.artifacts import dir_bytes
+
 
 def list_run_partitions(path: str, partition_col: str = "run_date") -> list[str]:
     """Partition values present under ``path`` (Hive layout
@@ -46,17 +48,6 @@ def list_run_partitions(path: str, partition_col: str = "run_date") -> list[str]
     return sorted(vals)
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def expire_runs(
     path: str,
     keep_last: int,
@@ -76,7 +67,7 @@ def expire_runs(
     removed, failed = [], []
     for v in expired:
         part_dir = os.path.join(path, f"{partition_col}={v}")
-        size = _dir_bytes(part_dir)
+        size = dir_bytes(part_dir)
         if dry_run:
             reclaimed += size
             removed.append(v)

@@ -12,9 +12,13 @@ Spark writes ``_SUCCESS`` markers natively on every job.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 from dataclasses import asdict, dataclass, field
+
+from aws_imdb_data_pipeline_spark.lifecycle.artifacts import (
+    read_json,
+    write_json,
+)
 
 
 @dataclass
@@ -37,19 +41,21 @@ class RunManifest:
 
 def write_manifest(manifest: RunManifest, directory: str) -> str:
     """Write _MANIFEST.json + _SUCCESS (imdb_raw_ingest.py:282-308)."""
-    os.makedirs(directory, exist_ok=True)
     path = os.path.join(directory, "_MANIFEST.json")
-    payload = {**asdict(manifest), "status_counts": manifest.status_counts}
-    with open(path, "w") as f:
-        json.dump(payload, f, indent=2, sort_keys=True)
+    write_json(
+        path, {**asdict(manifest), "status_counts": manifest.status_counts}
+    )
     with open(os.path.join(directory, "_SUCCESS"), "w"):
         pass
     return path
 
 
 def read_manifest(directory: str) -> dict:
-    with open(os.path.join(directory, "_MANIFEST.json")) as f:
-        return json.load(f)
+    path = os.path.join(directory, "_MANIFEST.json")
+    manifest = read_json(path)
+    if manifest is None:
+        raise FileNotFoundError(f"no readable run manifest at {path}")
+    return manifest
 
 
 def md5_file(path: str, chunk_size: int = 1 << 20) -> str:
@@ -68,24 +74,13 @@ def content_changed(
     metadata (etag / last_modified / content_length) differs from the
     recorded state (imdb_raw_ingest.py:176-204). With ``update=True``
     the new state is recorded immediately; ingest callers should pass
-    ``update=False`` and call :func:`write_control` only after the
-    download succeeds, or a failed transfer is never retried."""
-    previous = None
-    if os.path.exists(control_path):
-        with open(control_path) as f:
-            previous = json.load(f)
+    ``update=False`` and write the control file only after the
+    download succeeds (the reference's write-after-upload ordering,
+    imdb_raw_ingest.py:282-308), or a failed transfer is never
+    retried."""
+    previous = read_json(control_path)
     changed = previous != remote_meta
     if changed and update:
-        write_control(control_path, remote_meta)
+        write_json(control_path, remote_meta)
     return changed
 
-
-def write_control(control_path: str, remote_meta: dict) -> None:
-    """Commit remote metadata to the control file (the post-success half
-    of change detection — mirrors the reference's write-after-upload
-    ordering, imdb_raw_ingest.py:282-308)."""
-    os.makedirs(os.path.dirname(control_path) or ".", exist_ok=True)
-    tmp = control_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(remote_meta, f, sort_keys=True)
-    os.replace(tmp, control_path)

@@ -284,17 +284,9 @@ def table_bytes(
             stats = _catalog_stats_bytes(spark, cat)
             if stats is not None:
                 return stats
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(path):
-        return os.stat(path).st_size
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.stat(os.path.join(root, f)).st_size
-            except OSError:
-                pass
-    return total
+    from aws_imdb_data_pipeline_spark.lifecycle.artifacts import dir_bytes
+
+    return dir_bytes(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _catalog_stats_bytes(spark: SparkSession, cat: str) -> int | None:

@@ -11,14 +11,18 @@ and exact-cosine re-ranks a bounded shortlist.
 
 Per-batch results are IDENTICAL to the batch serve on the same rows —
 queries are scored independently, so foreachBatch changes delivery,
-never answers (pinned by tests/test_streaming.py). Output rows carry
-``batch_id`` for the standard at-least-once replay hygiene.
+never answers (pinned by tests/test_streaming.py). Each micro-batch
+overwrites its own ``out_path/batch_id=<n>`` directory (the per-batch
+writer of streaming/sink.py), so an at-least-once replay rewrites it
+instead of duplicating rows; readers see ``batch_id`` as a partition
+column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from aws_imdb_data_pipeline_spark.streaming.sink import per_batch, start
 
 
 def stream_ann_topk(
@@ -34,25 +38,19 @@ def stream_ann_topk(
     trigger_available_now: bool = False,
 ):
     """Start a query answering ``query_stream`` micro-batches from the
-    IVF-PQ index at ``index_path``; (query_id, neighbor_id, cosine,
-    batch_id) rows append to ``out_path``. Returns the StreamingQuery."""
+    IVF-PQ index at ``index_path``; (query_id, neighbor_id, cosine) rows
+    land in ``out_path/batch_id=<n>``. Returns the StreamingQuery."""
     from aws_imdb_data_pipeline_spark.extensions.pq import (
         cosine_topk_ivf_pq_from_index,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        topk = cosine_topk_ivf_pq_from_index(
-            batch_df, spark, index_path, id_col, vec_col,
+    def topk(batch_df: DataFrame) -> DataFrame:
+        return cosine_topk_ivf_pq_from_index(
+            batch_df, batch_df.sparkSession, index_path, id_col, vec_col,
             k=k, n_probe=n_probe, refine_factor=refine_factor,
         )
-        topk.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
 
-    writer = query_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        query_stream, per_batch(out_path, topk), checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -13,14 +13,18 @@ sparse twin of `streaming.annserve.stream_ann_topk`.
 Per-batch results are IDENTICAL to the batch BM25 on the same query
 rows — queries are scored independently against a FIXED corpus
 version, so foreachBatch changes delivery, never answers (pinned by
-tests/test_streaming.py). Output rows carry ``batch_id`` for the
-standard at-least-once replay hygiene.
+tests/test_streaming.py). Each micro-batch overwrites its own
+``out_path/batch_id=<n>`` directory (the per-batch writer of
+streaming/sink.py), so an at-least-once replay rewrites it instead of
+duplicating rows; readers see ``batch_id`` as a partition column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from aws_imdb_data_pipeline_spark.streaming.sink import per_batch, start
 
 
 def stream_bm25_topk(
@@ -37,12 +41,12 @@ def stream_bm25_topk(
 ):
     """Start answering ``query_stream`` micro-batches from the
     token-stats artifact of ``sf_dir``; (query_id, rank, doc_id,
-    score, batch_id) rows append to ``out_path``. Returns the
+    score) rows land in ``out_path/batch_id=<n>``. Returns the
     StreamingQuery. The artifact is resolved per trigger by its
     stat-fingerprint marker (a filesystem check, no scan; built only
     if missing/stale) — the serve loop reads persisted parquet."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def topk(batch_df: DataFrame) -> DataFrame:
         spark = batch_df.sparkSession
         from aws_imdb_data_pipeline_spark.extensions.retrieval import bm25_topk
         from aws_imdb_data_pipeline_spark.extensions.tokenindex import (
@@ -57,18 +61,13 @@ def stream_bm25_topk(
         dfreq = ts.dfl().select(
             F.col("lword").alias("__t"), F.col("df").alias("__df")
         )
-        topk = bm25_topk(
+        return bm25_topk(
             batch_df, batch_df, id_col="doc_id",
             qid_col=qid_col, qtext_col=qtext_col, k=k, k1=k1, b=b,
             corpus=(tf, dfreq, (ts.n_docs, ts.avgdl)),
         )
-        topk.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
 
-    writer = query_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        query_stream, per_batch(out_path, topk), checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

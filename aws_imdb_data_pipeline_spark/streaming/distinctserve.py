@@ -10,21 +10,17 @@ leaves the state bit-identical. The committed state therefore answers
 "exact distinct users per group so far" at any time, exactly, from a
 KB-scale artifact.
 
-The versioned-marker protocol (streaming/ivmserve.py) is still used —
+State is committed through the versioned sink (streaming/sink.py) —
 it gives atomic publication, skips redundant replay work, and rejects
 a different stream claiming the state dir — but unlike the additive
 IVM/drift state, correctness here does not DEPEND on the skip: a
 replay that raced past the marker would OR in the same bits and
-change nothing. That claim requires the commit to be a STAGE +
-RENAME (below): a same-version replay re-merges prev FROM
-``v={batch_id}`` while writing the result INTO ``v={batch_id}``, and
-a lazy in-place ``mode("overwrite")`` of a path being read is exactly
-the self-overwrite Spark rejects. Writing to a staging dir and
-renaming makes the OR-idempotence argument hold for the
-implementation, not just the algebra. ``n_rows`` is deliberately
-dropped from the streaming state for the same reason (a sum is not
-idempotent); row counting belongs to an additive view, not the
-distinct artifact.
+change nothing. The sink's stage + rename keeps that argument true
+of the implementation too: the merge lazily reads the previous
+version while the new one is written, so it never overwrites a path
+it reads. ``n_rows`` is deliberately dropped from the streaming state
+for the same reason (a sum is not idempotent); row counting belongs
+to an additive view, not the distinct artifact.
 
 100 TB story: per trigger the stream-side work is one partial
 aggregate over the batch (bitmap pages combine map-side); state
@@ -37,16 +33,21 @@ stream history.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_imdb_data_pipeline_spark.lifecycle.artifacts import dir_bytes
 from aws_imdb_data_pipeline_spark.operators.sketches import (
     BITMAP_BUCKET_COL,
     BITMAP_COL,
     bitmap_distinct,
     bitmap_partials,
+)
+from aws_imdb_data_pipeline_spark.streaming.sink import (
+    committed,
+    start,
+    versioned,
 )
 
 # Commit-parallelism target: one output file per ~64 MB of on-disk
@@ -57,23 +58,6 @@ from aws_imdb_data_pipeline_spark.operators.sketches import (
 _STATE_BYTES_PER_PARTITION = 64 * 1024 * 1024
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-from aws_imdb_data_pipeline_spark.streaming.ivmserve import (
-    _gc_versions,
-    _read_marker,
-    _replay_guard,
-    _write_marker,
-)
-
-
 def current_distinct(
     spark: SparkSession,
     state_dir: str,
@@ -82,15 +66,9 @@ def current_distinct(
     """EXACT distinct counts per ``group_cols`` (or one global row) as
     of the latest committed version — two tiny aggregations over the
     stored bitmap pages."""
-    marker = _read_marker(state_dir)
-    if marker is None:
-        raise FileNotFoundError(
-            f"no committed bitmap state under {state_dir}"
-        )
-    pages = spark.read.parquet(
-        os.path.join(state_dir, f"v={marker['batch_id']}", "bitmaps")
+    return bitmap_distinct(
+        committed(spark, state_dir, "bitmaps"), group_cols
     )
-    return bitmap_distinct(pages, group_cols)
 
 
 def stream_distinct_bitmaps(
@@ -109,22 +87,16 @@ def stream_distinct_bitmaps(
     a plain DataFrame, so the exact same bitmap_partials plan runs."""
     spark = stream_df.sparkSession
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _read_marker(state_dir)
-        if _replay_guard(marker, batch_id, checkpoint_dir):
-            return  # replay of an already-committed batch
-
+    def step(batch_df: DataFrame, prev: str | None, out: str) -> None:
         delta = bitmap_partials(batch_df, key_cols, value_col).drop(
             "n_rows"
         )
         n_parts = 1
-        if marker is not None:
-            prev_dir = os.path.join(
-                state_dir, f"v={marker['batch_id']}", "bitmaps"
-            )
-            prev = spark.read.parquet(prev_dir)
+        if prev is not None:
+            prev_dir = os.path.join(prev, "bitmaps")
             merged = (
-                prev.unionByName(delta)
+                spark.read.parquet(prev_dir)
+                .unionByName(delta)
                 .groupBy(*key_cols, BITMAP_BUCKET_COL)
                 .agg(F.bitmap_or_agg(BITMAP_COL).alias(BITMAP_COL))
             )
@@ -133,40 +105,17 @@ def stream_distinct_bitmaps(
             # by at most the batch's new pages, so prev is the right
             # estimator and costs one os.walk, no extra Spark job)
             n_parts = max(
-                1, -(-_dir_bytes(prev_dir) // _STATE_BYTES_PER_PARTITION)
+                1, -(-dir_bytes(prev_dir) // _STATE_BYTES_PER_PARTITION)
             )
         else:
             merged = delta  # already one page per (key, bucket)
-
-        # Stage + rename: the merged plan lazily READS the previous
-        # version while the write runs, and on a same-version replay
-        # (marker lost, guard bypassed) prev and the target are the
-        # SAME directory — an in-place overwrite would self-clobber.
-        # Writing to a sibling staging dir and os.replace-ing it into
-        # place makes every replay shape safe and keeps the version
-        # publication crash-atomic (a crashed commit leaves only an
-        # unreferenced staging dir, cleaned on the next attempt).
-        vdir = os.path.join(state_dir, f"v={batch_id}")
-        staging = os.path.join(state_dir, f"_staging_v{batch_id}")
-        shutil.rmtree(staging, ignore_errors=True)
         merged.repartition(
             n_parts, *key_cols, BITMAP_BUCKET_COL
-        ).write.mode("overwrite").parquet(os.path.join(staging, "bitmaps"))
-        if os.path.exists(vdir):
-            # orphan from a crash between data write and marker move —
-            # never published (the marker still points elsewhere)
-            shutil.rmtree(vdir)
-        os.replace(staging, vdir)
-        _write_marker(
-            state_dir,
-            {"batch_id": batch_id, "checkpoint": checkpoint_dir},
-        )
-        if marker is not None and marker["batch_id"] >= 1:
-            _gc_versions(state_dir, marker["batch_id"])
+        ).write.mode("overwrite").parquet(os.path.join(out, "bitmaps"))
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        stream_df,
+        versioned(state_dir, checkpoint_dir, step),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -12,11 +12,11 @@ second aggregation in the same query; foreachBatch runs the whole
 tiny cell→psi pipeline per trigger instead, and lets the committed
 state double as a batch-readable table.
 
-Exactly-once uses the same versioned-marker protocol as
-streaming/ivmserve.py: cells + drift are written together to a fresh
-``v=<batch_id>`` directory and published by ONE atomic marker rename;
-a replayed batch (foreachBatch is at-least-once) sees the marker at-
-or-past its batch_id and skips.
+Exactly-once comes from the versioned sink of streaming/sink.py:
+cells + drift are written together as one ``v=<batch_id>`` version
+and published by ONE atomic marker replace; a replayed batch
+(foreachBatch is at-least-once) sees the marker at-or-past its
+batch_id and skips.
 
 100 TB story: per trigger the stream-side work is one partial
 aggregate over the batch (combiner-friendly, 8-byte group keys);
@@ -37,11 +37,10 @@ from aws_imdb_data_pipeline_spark.extensions.drift import (
     cell_counts,
     psi_ks_from_cells,
 )
-from aws_imdb_data_pipeline_spark.streaming.ivmserve import (
-    _gc_versions,
-    _read_marker,
-    _replay_guard,
-    _write_marker,
+from aws_imdb_data_pipeline_spark.streaming.sink import (
+    committed,
+    start,
+    versioned,
 )
 
 
@@ -57,12 +56,7 @@ def reference_cells(
 
 def current_drift(spark: SparkSession, state_dir: str) -> DataFrame:
     """The committed drift frame as of the latest published version."""
-    marker = _read_marker(state_dir)
-    if marker is None:
-        raise FileNotFoundError(f"no committed drift state under {state_dir}")
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v={marker['batch_id']}", "drift")
-    )
+    return committed(spark, state_dir, "drift")
 
 
 def stream_drift_monitor(
@@ -100,37 +94,30 @@ def stream_drift_monitor(
         reference.coalesce(1).write.mode("overwrite").parquet(ref_dir)
     ref = spark.read.parquet(ref_dir)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _read_marker(state_dir)
-        if _replay_guard(marker, batch_id, checkpoint_dir):
-            return  # replay of an already-committed batch
-
+    def step(batch_df: DataFrame, prev: str | None, out: str) -> None:
         delta = cell_counts(
             batch_df, group_col, bin_value(value_col, width, max_bin), "cnt_b"
         )
-        if marker is not None:
-            prev = spark.read.parquet(
-                os.path.join(state_dir, f"v={marker['batch_id']}", "cells")
-            )
+        if prev is not None:
             live = (
-                prev.unionByName(delta)
+                spark.read.parquet(os.path.join(prev, "cells"))
+                .unionByName(delta)
                 .groupBy(group_col, "bin")
                 .agg(F.sum("cnt_b").alias("cnt_b"))
             )
         else:
             live = delta
 
-        vdir = os.path.join(state_dir, f"v={batch_id}")
         live.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(vdir, "cells")
+            os.path.join(out, "cells")
         )
-        committed_live = spark.read.parquet(os.path.join(vdir, "cells"))
+        stored_live = spark.read.parquet(os.path.join(out, "cells"))
         # NULL-SAFE merge on the group key: a NULL group is a
         # legitimate groupBy group in the cell frames (bins are
         # non-null by cell_counts' filter), and a null-unsafe
         # USING-join would split it into two half-rows instead of
         # pairing reference against live.
-        r, l = ref.alias("__ref"), committed_live.alias("__live")
+        r, l = ref.alias("__ref"), stored_live.alias("__live")
         gr, gl = F.col(f"__ref.{group_col}"), F.col(f"__live.{group_col}")
         merged = r.join(
             l,
@@ -145,19 +132,12 @@ def stream_drift_monitor(
         )
         drift = psi_ks_from_cells(merged, group_col, n_bins=n_bins)
         drift.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(vdir, "drift")
+            os.path.join(out, "drift")
         )
-        _write_marker(
-            state_dir, {"batch_id": batch_id, "checkpoint": checkpoint_dir}
-        )
-        # GC: keep current + previous version — same retention as
-        # ivmserve; without it state_dir grows one dir per batch forever
-        if marker is not None and marker["batch_id"] >= 1:
-            _gc_versions(state_dir, marker["batch_id"])
 
-    writer = events_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        events_stream,
+        versioned(state_dir, checkpoint_dir, step),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aws_imdb_data_pipeline_spark.streaming.sink import start
+
 
 def tumbling_counts(
     events: DataFrame,
@@ -122,24 +124,23 @@ def stream_to_lake(
 ):
     """Stream → partitioned parquet lake via foreachBatch.
 
-    Each micro-batch writes through the same idempotent partitioned
-    writer the batch pipeline uses; the checkpoint gives restart
-    recovery (a replayed batch appends to the same partitions —
-    exactly-once is provided by batch-id-aware sinks; for a run-date
-    lake the replace-partition semantics make replays idempotent at
-    the slice level).
+    Each micro-batch APPENDS through the partitioned writer the batch
+    pipeline uses, and the checkpoint gives restart recovery. Delivery
+    is AT-LEAST-ONCE: a batch replayed after a crash between its write
+    and the checkpoint commit appends its rows again. Deduplicate
+    downstream on the event key, or use the per-batch writer of
+    streaming/sink.py where duplicates are not acceptable.
     """
     from aws_imdb_data_pipeline_spark.sources.lake import write_partitioned
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_partitioned(batch_df, lake_path, partition_cols)
-
-    writer = stream_df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        stream_df,
+        lambda batch_df, _id: write_partitioned(
+            batch_df, lake_path, partition_cols
+        ),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_events(

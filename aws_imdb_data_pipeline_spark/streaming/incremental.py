@@ -15,18 +15,18 @@ hands a plain DataFrame, so the exact same plan runs — broadcast of
 the batch's (band, bucket) rows against the __list-partitioned index,
 semi-join-narrowed exact-Jaccard verify.
 
-Delivery: parquet append inside foreachBatch is at-least-once on
-crash/replay (the checkpoint replays an unacknowledged batch, which
-appends again). Every output row carries ``batch_id`` so a replayed
-batch is removable downstream (``dropDuplicates`` on the pair key, or
-filter to max batch_id per pair) — the standard foreachBatch
-idempotency contract, same as stream_to_lake's.
+Delivery is exactly-once at the output: each micro-batch overwrites
+its own ``out_path/batch_id=<n>`` directory (the per-batch writer of
+streaming/sink.py), so a replayed batch rewrites its pairs instead of
+appending them again; readers see ``batch_id`` as a partition
+column.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from aws_imdb_data_pipeline_spark.streaming.sink import per_batch, start
 
 
 def stream_incremental_near_dup(
@@ -43,8 +43,8 @@ def stream_incremental_near_dup(
     """Start a query draining ``stream_docs`` micro-batches through
     :func:`~aws_imdb_data_pipeline_spark.extensions.dedup.
     incremental_near_dup_pairs` against the index at ``index_path``;
-    verified pairs (new_id, corpus_id, jaccard, batch_id) append to
-    ``out_path``. Returns the StreamingQuery.
+    verified pairs (new_id, corpus_id, jaccard) land in
+    ``out_path/batch_id=<n>``. Returns the StreamingQuery.
 
     ``corpus_docs`` must be the frame the index was built from (the
     verify step re-shingles only candidate corpus docs); stream ids
@@ -54,17 +54,12 @@ def stream_incremental_near_dup(
         incremental_near_dup_pairs,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        pairs = incremental_near_dup_pairs(
+    def pairs(batch_df: DataFrame) -> DataFrame:
+        return incremental_near_dup_pairs(
             batch_df, corpus_docs, index_path, id_col, text_col, threshold
         )
-        pairs.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(out_path)
 
-    writer = stream_docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        stream_docs, per_batch(out_path, pairs), checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -18,89 +18,29 @@ aggregations cannot express. foreachBatch + the delta algebra is the
 standard implementation of streaming IVM on Spark.
 
 EXACTLY-ONCE is a transactional-commit property, not an idempotency
-hand-wave: snapshot and view are written together to a fresh
-``v=<batch_id>`` directory and published by ONE atomic marker rename.
-A replayed batch (foreachBatch is at-least-once) sees the marker
-already at-or-past its batch_id and SKIPS — so a crash between "data
-written" and "marker moved" replays cleanly (the orphan version dir
-is overwritten), and a crash after the marker cannot double-apply.
-Writing view-then-snapshot or snapshot-then-view as separate commits
-fails both crash cases (double-apply or dropped batch); the versioned
-marker is the minimal correct protocol.
+hand-wave: snapshot and view are written together as ONE version of
+the state and published by ONE atomic marker replace — the versioned
+sink of streaming/sink.py. Writing view-then-snapshot or
+snapshot-then-view as separate commits fails both crash cases
+(double-apply or dropped batch).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 
-
-def _read_marker(state_dir: str) -> dict | None:
-    try:
-        with open(os.path.join(state_dir, "_latest.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
-
-
-def _write_marker(state_dir: str, meta: dict) -> None:
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, "_latest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(state_dir, "_latest.json"))
-
-
-def _replay_guard(marker: dict | None, batch_id: int, checkpoint_dir: str) -> bool:
-    """True iff ``batch_id`` is a genuine at-least-once REPLAY of an
-    already-committed batch and must be skipped. foreachBatch batch ids
-    are monotone per CHECKPOINT, so a marker at-or-past the incoming id
-    is only a replay when the checkpoint identity matches; a fresh
-    checkpoint restarts ids at 0, and silently skipping there would
-    drop every batch against the surviving state_dir. That mismatch is
-    an operator error (two different streams claiming one state dir) —
-    raise, don't drop data. Markers written before the identity field
-    existed keep the legacy skip-on-regression behavior."""
-    if marker is None or marker["batch_id"] < batch_id:
-        return False
-    committed_ckpt = marker.get("checkpoint")
-    if committed_ckpt is not None and committed_ckpt != checkpoint_dir:
-        raise RuntimeError(
-            f"state dir was committed by a different stream "
-            f"(checkpoint {committed_ckpt!r}, this stream "
-            f"{checkpoint_dir!r}, marker batch {marker['batch_id']} >= "
-            f"incoming batch {batch_id}): refusing to silently drop "
-            f"batches — point the stream at a fresh state_dir or reuse "
-            f"the original checkpoint"
-        )
-    return True
-
-
-def _gc_versions(state_dir: str, keep_from: int) -> None:
-    """Drop every ``v=<n>`` dir with n < keep_from — the keep-current-
-    plus-previous retention both versioned sinks share (previous covers
-    readers mid-scan of the just-superseded version)."""
-    import shutil
-
-    for old in os.listdir(state_dir):
-        if old.startswith("v="):
-            v = int(old.split("=", 1)[1])
-            if v < keep_from:
-                shutil.rmtree(
-                    os.path.join(state_dir, old), ignore_errors=True
-                )
+from aws_imdb_data_pipeline_spark.streaming.sink import (
+    committed,
+    start,
+    versioned,
+)
 
 
 def current_view(spark, state_dir: str) -> DataFrame:
     """The committed view as of the latest published version."""
-    marker = _read_marker(state_dir)
-    if marker is None:
-        raise FileNotFoundError(f"no committed IVM state under {state_dir}")
-    return spark.read.parquet(
-        os.path.join(state_dir, f"v={marker['batch_id']}", "view")
-    )
+    return committed(spark, state_dir, "view")
 
 
 def stream_ivm_grouped_agg(
@@ -129,20 +69,15 @@ def stream_ivm_grouped_agg(
         state_transition_deltas,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, prev: str | None, out: str) -> None:
         spark = batch_df.sparkSession
-        marker = _read_marker(state_dir)
-        if _replay_guard(marker, batch_id, checkpoint_dir):
-            return  # replayed batch already committed — skip
-        vdir = os.path.join(state_dir, f"v={batch_id}")
         pins: list[DataFrame] = []
-        if marker is None:
+        if prev is None:
             new_state = latest_state(
                 batch_df, keys, seq_cols, op_col=op_col, delete_op=delete_op
             )
             view = grouped_state_agg(new_state, group_cols, val_col)
         else:
-            prev = os.path.join(state_dir, f"v={marker['batch_id']}")
             snapshot = spark.read.parquet(os.path.join(prev, "snapshot"))
             base = spark.read.parquet(os.path.join(prev, "view"))
             deltas = state_transition_deltas(
@@ -155,23 +90,17 @@ def stream_ivm_grouped_agg(
                 op_col=op_col, delete_op=delete_op,
             )
         new_state.write.mode("overwrite").parquet(
-            os.path.join(vdir, "snapshot")
+            os.path.join(out, "snapshot")
         )
-        view.write.mode("overwrite").parquet(os.path.join(vdir, "view"))
-        _write_marker(
-            state_dir, {"batch_id": batch_id, "checkpoint": checkpoint_dir}
-        )
+        view.write.mode("overwrite").parquet(os.path.join(out, "view"))
         # the per-batch touched-key pin served its job (both writes are
-        # committed) — release it, or cached blocks accumulate forever
+        # done) — release it, or cached blocks accumulate forever
         for p in pins:
             p.unpersist()
-        # GC: keep current + previous version
-        if marker is not None and marker["batch_id"] >= 1:
-            _gc_versions(state_dir, marker["batch_id"])
 
-    writer = changelog_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        changelog_stream,
+        versioned(state_dir, checkpoint_dir, step),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -16,21 +16,18 @@ quality operators, completing the artifact-serving stream family
 
 Per-batch outputs are IDENTICAL to the batch scorers on the same rows
 (pinned in tests/test_streaming.py). Delivery is EXACTLY-ONCE at the
-output: each micro-batch overwrites its own ``batch_id=<n>`` partition
-directory, so an at-least-once redelivery (crash between the parquet
-write and the checkpoint commit) rewrites the same directory instead
-of appending duplicate rows — the same hole ivmserve/drift close with
-their marker guard, solved here by idempotent writes because the sink
-is stateless (no cross-batch state to protect, so overwrite-by-key is
-sufficient and cheaper than a marker protocol). Readers load the root
-path; ``batch_id`` surfaces as a partition column.
+output through the per-batch writer of streaming/sink.py: each
+micro-batch overwrites its own ``batch_id=<n>`` partition directory,
+so an at-least-once redelivery rewrites that directory instead of
+appending duplicate rows. Readers load the root path; ``batch_id``
+surfaces as a partition column.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from aws_imdb_data_pipeline_spark.streaming.sink import per_batch, start
 
 
 def stream_quality_scores(
@@ -48,17 +45,14 @@ def stream_quality_scores(
         score_quality,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        score_quality(model, batch_df, text_col=text_col).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_path, f"batch_id={batch_id}"))
-
-    writer = docs_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        docs_stream,
+        per_batch(
+            out_path, lambda b: score_quality(model, b, text_col=text_col)
+        ),
+        checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dsir_weights(
@@ -86,16 +80,12 @@ def stream_dsir_weights(
         dsir_score_batch,
     )
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dsir_score_batch(
+    def score(batch_df: DataFrame) -> DataFrame:
+        return dsir_score_batch(
             batch_df, stats, nt, nq, v, id_col=id_col, text_col=text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
         )
 
-    writer = docs_stream.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
+    return start(
+        docs_stream, per_batch(out_path, score), checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -559,6 +559,28 @@ def test_stream_incremental_near_dup_matches_batch(spark, tmp_path):
     # the feed is batch-attributed (the at-least-once replay handle)
     assert got_df.select("batch_id").distinct().count() >= 3
 
+    # at-least-once replay: a crash between the pair write and the
+    # checkpoint commit re-delivers the last batch under its batch_id;
+    # the feed must not gain a single duplicate pair. The docgen source
+    # is drained, so wait for the replayed batch's commit record.
+    n_before = got_df.count()
+    last = got_df.agg(F.max("batch_id")).first()[0]
+    _delete_commit(ckpt, last)
+    q2 = stream_incremental_near_dup(
+        stream, corpus, idx, out, ckpt, threshold=0.8
+    )
+    deadline = time.time() + 180
+    while not os.path.exists(os.path.join(ckpt, "commits", str(last))):
+        assert time.time() < deadline, "replayed batch never committed"
+        time.sleep(1)
+    q2.stop()
+    replayed = spark.read.parquet(out)
+    assert replayed.count() == n_before
+    assert {
+        (r.new_id, r.corpus_id, round(r.jaccard, 6))
+        for r in replayed.collect()
+    } == want
+
 
 def test_stream_per_source_quota_matches_batch_rule(spark, tmp_path):
     """Streaming per-source admission (streaming/quota.py): docgen docs
@@ -677,6 +699,21 @@ def test_stream_ann_topk_matches_batch_serve(spark, sf_dir, tmp_path):
     assert got == want
     assert got_df.select("batch_id").distinct().count() >= 2
 
+    # at-least-once replay of the last batch adds no duplicate rows
+    n_before = got_df.count()
+    _delete_commit(ckpt, got_df.agg(F.max("batch_id")).first()[0])
+    q2 = stream_ann_topk(
+        qstream, index_path, out, ckpt, k=5, n_probe=4,
+        trigger_available_now=True,
+    )
+    q2.awaitTermination(180)
+    q2.stop()
+    replayed = spark.read.parquet(out)
+    assert replayed.count() == n_before
+    assert {
+        (r.query_id, r.neighbor_id, r.cosine) for r in replayed.collect()
+    } == want
+
 
 def test_stream_bm25_topk_matches_batch_serve(spark, sf_dir, tmp_path):
     """Streaming lexical retrieval (streaming/bm25serve.py): text
@@ -739,6 +776,20 @@ def test_stream_bm25_topk_matches_batch_serve(spark, sf_dir, tmp_path):
     }
     assert got == want
     assert got_df.select("batch_id").distinct().count() >= 2
+
+    # at-least-once replay of the last batch adds no duplicate rows
+    n_before = got_df.count()
+    _delete_commit(ckpt, got_df.agg(F.max("batch_id")).first()[0])
+    q2 = stream_bm25_topk(
+        qstream, sf_dir, out, ckpt, k=3, trigger_available_now=True
+    )
+    q2.awaitTermination(180)
+    q2.stop()
+    replayed = spark.read.parquet(out)
+    assert replayed.count() == n_before
+    assert {
+        (r.query_id, r.rank, r.doc_id, r.score) for r in replayed.collect()
+    } == want
 
 
 # ... and again on the distributed BM25 plan
