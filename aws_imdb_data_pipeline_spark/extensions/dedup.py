@@ -48,7 +48,9 @@ from pyspark.sql.types import (
 
 from aws_imdb_data_pipeline_spark.extensions.driverside import (
     SPARK_HASH_SEED,
+    DriverMemo,
     fits_driver,
+    frames_key,
     xxh64_int,
     xxh64_long,
 )
@@ -433,8 +435,10 @@ def minhash_dedup_pairs(
     A corpus that fits the driver (:func:`driverside.fits_driver` — at
     most ``spark.sql.autoBroadcastJoinThreshold`` by plan-time estimate)
     with an integral or string id runs :func:`_minhash_pairs_on_driver`
-    instead: its Spark jobs run at call time, the same rows come
-    back as a local relation, and nothing is pinned."""
+    instead: its Spark jobs run at call time (none when the same
+    corpus files were deduplicated with the same parameters just
+    before), the same rows come back as a local relation, and nothing
+    is pinned."""
     # ids the driver orders exactly as Spark does (id_a < id_b)
     id_type = docs.schema[id_col].dataType
     if (isinstance(id_type, IntegralType) or id_type == StringType()) and fits_driver(docs):
@@ -453,6 +457,13 @@ def minhash_dedup_pairs(
     return verified.filter(F.col("jaccard") >= threshold)
 
 
+# The pairs table of the last corpus deduplicated on the driver, under
+# the frames_key of the corpus frame plus the call's parameters: the
+# pairs are a function of those alone, so a repeated dedup step over an
+# unchanged corpus runs no job.
+_PAIRS_MEMO = DriverMemo()
+
+
 def _minhash_pairs_on_driver(
     docs: DataFrame,
     id_col: str,
@@ -464,7 +475,41 @@ def _minhash_pairs_on_driver(
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """:func:`minhash_dedup_pairs` for a corpus that fits the driver:
-    the same rows, from two Spark jobs.
+    the same rows, from two Spark jobs (:func:`_minhash_pairs_table`),
+    or from none when the pairs of the same corpus files, plan and
+    parameters are in ``_PAIRS_MEMO``."""
+    key = frames_key(docs)
+    if key is not None:
+        key += (id_col, text_col, k, num_hashes, bands, threshold, max_bucket_size)
+    table = _PAIRS_MEMO.get(key)
+    if table is None:
+        table = _minhash_pairs_table(
+            docs, id_col, text_col, k, num_hashes, bands, threshold, max_bucket_size
+        )
+        _PAIRS_MEMO.put(key, table)
+    id_field = docs.schema[id_col]
+    schema = StructType([
+        StructField("id_a", id_field.dataType, id_field.nullable),
+        StructField("id_b", id_field.dataType, id_field.nullable),
+        StructField("jaccard", DoubleType(), True),
+    ])
+    # an Arrow table plans as a LocalRelation: evaluating it starts no
+    # Python worker
+    return docs.sparkSession.createDataFrame(table, schema)
+
+
+def _minhash_pairs_table(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_bucket_size: int,
+) -> pa.Table:
+    """The (id_a, id_b, jaccard) pairs of :func:`minhash_dedup_pairs`,
+    computed on the driver.
 
     The first job is :func:`shingle_docs` plus the per-shingle
     ``xxhash64``, collected through Arrow. The rest follows the
@@ -543,21 +588,12 @@ def _minhash_pairs_on_driver(
                 out_a.append(id_of[a])
                 out_b.append(id_of[b])
                 out_j.append(jac)
-    id_field = docs.schema[id_col]
     id_arrow = t.schema.field(0).type
-    table = pa.table({
+    return pa.table({
         "id_a": pa.array(out_a, id_arrow),
         "id_b": pa.array(out_b, id_arrow),
         "jaccard": pa.array(out_j, pa.float64()),
     })
-    schema = StructType([
-        StructField("id_a", id_field.dataType, id_field.nullable),
-        StructField("id_b", id_field.dataType, id_field.nullable),
-        StructField("jaccard", DoubleType(), True),
-    ])
-    # an Arrow table plans as a LocalRelation: evaluating it starts no
-    # Python worker
-    return docs.sparkSession.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -17,9 +17,17 @@ which report ``Long.MaxValue``) the distributed plan runs unchanged.
 a long and an int; seed 42 is Spark's default), so driver-side MinHash
 signatures are bit-identical to the distributed plan's while each
 distinct shingle hash is seed-hashed once, in bulk.
+
+An analyst session repeats its corpus steps over unchanged inputs, so
+a kernel keeps its collected tables in a :class:`DriverMemo` keyed by
+:func:`frames_key`; a repeat over the same files skips its corpus jobs.
 """
 
 from __future__ import annotations
+
+import os
+import threading
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -55,6 +63,63 @@ def fits_driver(*frames: DataFrame) -> bool:
             return False
         total += est
     return total <= limit
+
+
+def frames_key(*frames: DataFrame) -> tuple | None:
+    """Memo key of what ``frames`` compute: the application id, each
+    frame's ``semanticHash()`` (its plan, literals included) and the
+    (path, mtime_ns, size) of every file they read, so a rewrite of any
+    input changes the key. None when a frame reads anything but local
+    files: nothing would then show that its content changed."""
+    files = []
+    for df in frames:
+        uris = df.inputFiles()
+        if not uris:
+            return None
+        for uri in uris:
+            u = urlparse(uri)
+            if u.scheme != "file":
+                return None
+            path = unquote(u.path)
+            try:
+                st = os.stat(path)
+            except OSError:
+                return None
+            files.append((path, st.st_mtime_ns, st.st_size))
+    return (
+        frames[0].sparkSession.sparkContext.applicationId,
+        *(df.semanticHash() for df in frames),
+        tuple(sorted(files)),
+    )
+
+
+class DriverMemo:
+    """The last value a driver-side kernel collected, under its
+    :func:`frames_key`. One entry: a session works on one corpus at a
+    time, and an entry holds corpus-sized tables on the driver. The lock
+    is for stream threads (``foreachBatch``) calling in beside the
+    session's own thread."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._key: tuple | None = None
+        self._value = None
+
+    def get(self, key: tuple | None):
+        """The value stored under ``key``, else None."""
+        with self._lock:
+            return self._value if key is not None and key == self._key else None
+
+    def put(self, key: tuple | None, value) -> None:
+        """Keep ``value`` under ``key`` in place of the last entry; a
+        None key keeps nothing."""
+        if key is not None:
+            with self._lock:
+                self._key, self._value = key, value
+
+    def clear(self) -> None:
+        with self._lock:
+            self._key = self._value = None
 
 
 # All arithmetic is on uint64 ARRAYS: numpy wraps them modulo 2^64

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aws_imdb_data_pipeline_spark.lifecycle.artifacts import ensure_artifact
 
@@ -100,8 +101,33 @@ def posting_rows(path: str) -> int:
     return total
 
 
-def _posting_scan(spark: SparkSession, path: str) -> DataFrame:
+# (abs path, mtime_ns, size) of an artifact frame directory -> its
+# schema. Reading parquet without a schema runs a Spark job to infer it
+# from a footer, each time an analyst step opens the tfl and dfl
+# frames; the frames are rewritten only as whole directories, so the
+# directory stat keys the schema and a repeated read of an unchanged
+# frame runs no job.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema of an unchanged
+    directory taken from the memo instead of inferred again."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
     df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
+def _posting_scan(spark: SparkSession, path: str) -> DataFrame:
+    df = _read(spark, path)
     try:
         files = [
             e
@@ -146,7 +172,7 @@ class TokenStats:
         # posting-cluster regime) — a round-robin widen underneath a
         # hash exchange would be a second, wasted shuffle.
         if not widen:
-            return self.spark.read.parquet(os.path.join(self.path, "tfl"))
+            return _read(self.spark, os.path.join(self.path, "tfl"))
         return _posting_scan(self.spark, os.path.join(self.path, "tfl"))
 
     def tfl_rows(self) -> int:
@@ -154,10 +180,10 @@ class TokenStats:
         return posting_rows(os.path.join(self.path, "tfl"))
 
     def dfl(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "dfl"))
+        return _read(self.spark, os.path.join(self.path, "dfl"))
 
     def vocab(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "vocab"))
+        return _read(self.spark, os.path.join(self.path, "vocab"))
 
 
 def token_stats(

@@ -23,7 +23,9 @@ on directory existence alone). This module is the single copy:
   missing/stale, and write ``_meta.json`` ATOMICALLY AFTER the build
   returns. A crashed/partial build leaves no marker, so the next
   caller rebuilds instead of serving garbage — the completion-marker
-  property every builder now inherits.
+  property every builder now inherits. Check, build and marker run
+  under one lock per artifact directory, so concurrent callers in a
+  process build it once and the rest serve the result.
 - :func:`write_json` / :func:`read_json` — the tmp + rename JSON write
   and the missing-or-torn-is-None read behind every marker in the
   engine: artifact and index metas, the ingest ``latest`` pointer and
@@ -41,6 +43,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import threading
 from typing import Callable
 
 
@@ -217,17 +220,32 @@ def ensure_artifact(
     fp = source_fingerprint(sources, params)
     path = artifact_dir(kind, sf_dir)
     reader = meta_reader or read_artifact_meta
-    meta = reader(path)
-    if meta is not None and meta.get("fingerprint") == fp:
-        return path, meta, False
-    extra = build(path, fp)
-    if extra is not None:
-        meta = {"fingerprint": fp, "params": dict(params), **extra}
-        write_json(os.path.join(path, "_meta.json"), meta)
-    else:
+    with _build_lock(path):
         meta = reader(path)
-        if meta is None or meta.get("fingerprint") != fp:
-            raise RuntimeError(
-                f"artifact build for {kind} wrote no valid marker at {path}"
-            )
+        if meta is not None and meta.get("fingerprint") == fp:
+            return path, meta, False
+        extra = build(path, fp)
+        if extra is not None:
+            meta = {"fingerprint": fp, "params": dict(params), **extra}
+            write_json(os.path.join(path, "_meta.json"), meta)
+        else:
+            meta = reader(path)
+            if meta is None or meta.get("fingerprint") != fp:
+                raise RuntimeError(
+                    f"artifact build for {kind} wrote no valid marker at {path}"
+                )
     return path, meta, True
+
+
+# artifact dir -> the lock its check, build and marker run under. Two
+# threads of one process (a stream's per-trigger serve and a batch
+# caller) would otherwise both see no marker and write the same
+# directory at once. The lock is re-entrant so a build may serve other
+# artifacts; locks are never dropped (one per artifact dir).
+_BUILD_LOCKS: dict[str, threading.RLock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
+
+
+def _build_lock(path: str) -> threading.RLock:
+    with _BUILD_LOCKS_GUARD:
+        return _BUILD_LOCKS.setdefault(os.path.abspath(path), threading.RLock())

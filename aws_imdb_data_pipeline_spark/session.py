@@ -69,6 +69,14 @@ DEFAULT_CONF: dict[str, str] = {
     # truncation, matching how SQL engines (e.g. DuckDB) read the same
     # files. Without this flag Spark refuses nanos parquet outright.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated classes are cached by source code in one JVM-wide LRU,
+    # 100 entries by default. One round of a warm analyst session (six
+    # registry queries and five corpus steps) generates 138 distinct
+    # classes, so the default evicts them in a cycle and every repeated
+    # step recompiles through Janino (32 classes a round); with room
+    # for 1000 a repeated round compiles none. An entry is one loaded
+    # class, a few KB of metaspace.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

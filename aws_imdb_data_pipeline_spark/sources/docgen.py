@@ -201,9 +201,11 @@ class DocGenStreamReader(SimpleDataSourceStreamReader):
         lo = int(start["next"])
         hi = min(lo + self.rows_per_batch, self.n_docs)
         end = {"next": hi}
-        # a materialized list, not a generator: the runner's prefetch
-        # cache copy.copy()s the returned iterator between triggers
-        return list(self.readBetweenOffsets(start, end)), end
+        # an iterator over a materialized list, not a generator: the
+        # runner's prefetch cache copy.copy()s the returned iterator
+        # between triggers, and calls next() on it when a drained
+        # stream returns start == end
+        return iter(list(self.readBetweenOffsets(start, end))), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         for doc_id in range(int(start["next"]), int(end["next"])):

@@ -4,6 +4,9 @@ MinHash band index, clustered events, bucketed partsupp)."""
 
 import json
 import os
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
@@ -48,6 +51,32 @@ def test_build_once_then_serve_warm(src_file, tmp_path, monkeypatch):
         "demo", "/data/sf0.01", src_file, {"k": 3}, build
     )
     assert not rebuilt2 and meta2 == meta and len(calls) == 1
+
+
+def test_concurrent_callers_build_once(src_file, tmp_path, monkeypatch):
+    """Two threads asking for one missing artifact (a stream's
+    per-trigger serve beside a batch caller): one builds, the other
+    waits and serves the same marker."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
+    calls = []
+    barrier = threading.Barrier(2)
+
+    def build(path, fp):
+        calls.append(fp)
+        time.sleep(0.3)
+        return {"builds": len(calls)}
+
+    def call():
+        barrier.wait(timeout=10)
+        return ensure_artifact("demo", "/data/sf0.01", src_file, {}, build)
+
+    with ThreadPoolExecutor(2) as pool:
+        results = [f.result(timeout=30) for f in [pool.submit(call) for _ in range(2)]]
+    assert len(calls) == 1
+    assert results[0][1] == results[1][1] == {
+        "fingerprint": calls[0], "params": {}, "builds": 1,
+    }
+    assert sorted(r[2] for r in results) == [False, True]
 
 
 def test_source_change_triggers_rebuild_in_place(src_file, tmp_path, monkeypatch):

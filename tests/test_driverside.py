@@ -2,14 +2,20 @@
 of Spark's long/int hashes match Spark bit for bit, the size rule caps
 the join threshold at Spark's default, and the driver-side MinHash and
 BM25 paths return exactly the distributed plans' rows on a corpus with
-empty, sub-k, NULL-text and duplicate-id documents."""
+empty, sub-k, NULL-text and duplicate-id documents. A repeated analyst
+step pays its fixed costs once: MinHash over unchanged files runs no
+job, BM25 over an unchanged artifact runs one, and a re-run query
+compiles no class."""
 
 from __future__ import annotations
 
+import functools
 import random
+import uuid
 
 import numpy as np
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aws_imdb_data_pipeline_spark.extensions import driverside, retrieval
@@ -23,6 +29,7 @@ from aws_imdb_data_pipeline_spark.extensions.retrieval import (
     bm25_topk,
 )
 from aws_imdb_data_pipeline_spark.extensions.tokenindex import token_stats
+from aws_imdb_data_pipeline_spark.sources import tables
 from tests.driver_paths import THRESHOLD
 
 BASE = " ".join(f"w{i}" for i in range(30))
@@ -125,9 +132,13 @@ def test_minhash_driver_path_same_rows_pins_nothing(spark, corpus_dir):
 
     assert _is_local(build())
     assert release_pinned_shingles() == 0  # the driver path pins nothing
+    # a repeat over the unchanged corpus files runs no job
+    again, jobs = _with_jobs(spark, lambda: build().collect())
+    assert jobs == 0
     driver, distributed = _both_paths(spark, build)
     release_pinned_shingles()
     assert driver == distributed  # jaccard doubles included
+    assert sorted(map(tuple, again)) == driver
     ids = {(a, b) for a, b, _ in driver}
     assert {(1, 2), (1, 3), (1, 7)} <= ids
     assert not any(4 in p or 5 in p or 6 in p for p in ids)
@@ -186,3 +197,92 @@ def test_bm25_driver_path_same_rows(spark, corpus_dir, tmp_path, monkeypatch):
     big = bm25_topk(None, queries, k=3, exclude_self=True, corpus=corpus)
     assert not _is_local(big)
     assert sorted(map(tuple, big.collect())) == driver
+
+
+def _with_jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted in a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _artifact_corpus(spark, sf_dir):
+    ts = token_stats(spark, sf_dir)
+    tf = ts.tfl().select(
+        "doc_id", F.col("lword").alias("__t"),
+        F.col("tf").alias("__tf"), F.col("dl").alias("__dl"),
+    )
+    dfreq = ts.dfl().select(F.col("lword").alias("__t"), F.col("df").alias("__df"))
+    return tf, dfreq, (ts.n_docs, ts.avgdl)
+
+
+def test_bm25_driver_path_job_floor_and_memo(spark, tmp_path, monkeypatch):
+    """A first call runs the query, vocabulary and posting collects; a
+    repeat over the unchanged artifact opens its frames without a job,
+    runs the query frame's job alone and returns the same rows; an
+    artifact rebuilt in place misses the memo and ranks the new
+    corpus."""
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", str(tmp_path / "arts"))
+    sf = str(tmp_path / "lake")
+    docs = spark.createDataFrame(_corpus_rows(), "doc_id long, text string")
+    docs.coalesce(1).write.parquet(f"{sf}/documents.parquet")
+    queries = spark.createDataFrame(
+        [(1, "w1 w2 w3 w7"), (5, "t1 t2 t3 t4 t5 t6"), (9, "tail twenty")],
+        "query_id long, qtext string",
+    )
+    retrieval._CORPUS_MEMO.clear()
+
+    def call():
+        corpus, opening = _with_jobs(spark, lambda: _artifact_corpus(spark, sf))
+        rows, jobs = _with_jobs(
+            spark,
+            lambda: bm25_topk(None, queries, k=3, corpus=corpus).collect(),
+        )
+        return rows, jobs, opening
+
+    first, jobs, _ = call()
+    assert 1 <= jobs <= 3
+    # the artifact's frames open without a schema job, and only the
+    # query frame is evaluated
+    again, jobs, opening = call()
+    assert (jobs, opening) == (1, 0)
+    assert again == first
+
+    # rewrite the corpus: the artifact is rebuilt in place (load_table's
+    # memoized scan of the old files is dropped first)
+    docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("overwrite").parquet(
+        f"{sf}/documents.parquet"
+    )
+    monkeypatch.setattr(tables, "_TABLE_CACHE", {})
+    fresh, jobs, _ = call()
+    assert jobs == 3
+    assert fresh != first
+    retrieval._CORPUS_MEMO.clear()
+    assert call()[0] == fresh
+
+
+def test_repeated_query_compiles_nothing(spark):
+    """The session's codegen cache holds more classes than a query
+    round generates: a query re-run after about 120 other generated
+    classes finds its classes still compiled."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def query():
+        return spark.range(10).select((F.col("id") * 7 + 3).alias("x")).collect()
+
+    query()
+    # 120 whole-stage classes, compiled at planning without a job
+    others = [
+        spark.range(1).select(F.col("id") + F.lit(1_000_000 + i)) for i in range(120)
+    ]
+    functools.reduce(DataFrame.union, others)._jdf.queryExecution().executedPlan().execute()
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    assert query() == [(i * 7 + 3,) for i in range(10)]
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == before

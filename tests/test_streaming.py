@@ -492,8 +492,6 @@ def test_stream_incremental_near_dup_matches_batch(spark, tmp_path):
     foreachBatch, and the accumulated pair feed equals the batch-path
     call on the same rows — per-batch semantics are literally the
     batch function, so parity must be exact (ids, jaccard values)."""
-    import time
-
     from pyspark.sql import functions as F
 
     from aws_imdb_data_pipeline_spark.extensions.dedup import (
@@ -540,14 +538,8 @@ def test_stream_incremental_near_dup_matches_batch(spark, tmp_path):
     }
     assert len(want) >= 300  # every re-crawled doc matches its source
 
-    deadline = time.time() + 180
-    n = 0
-    while n < len(want) and time.time() < deadline:
-        try:
-            n = spark.read.parquet(out).count()
-        except Exception:
-            n = 0
-        time.sleep(1)
+    # drains the source: a docgen stream must outlive its last batch
+    q.processAllAvailable()
     q.stop()
 
     got_df = spark.read.parquet(out)
@@ -561,19 +553,17 @@ def test_stream_incremental_near_dup_matches_batch(spark, tmp_path):
 
     # at-least-once replay: a crash between the pair write and the
     # checkpoint commit re-delivers the last batch under its batch_id;
-    # the feed must not gain a single duplicate pair. The docgen source
-    # is drained, so wait for the replayed batch's commit record.
+    # the feed must not gain a single duplicate pair. The restart runs
+    # availableNow over the drained source, so it ends on its own.
     n_before = got_df.count()
     last = got_df.agg(F.max("batch_id")).first()[0]
     _delete_commit(ckpt, last)
     q2 = stream_incremental_near_dup(
-        stream, corpus, idx, out, ckpt, threshold=0.8
+        stream, corpus, idx, out, ckpt, threshold=0.8,
+        trigger_available_now=True,
     )
-    deadline = time.time() + 180
-    while not os.path.exists(os.path.join(ckpt, "commits", str(last))):
-        assert time.time() < deadline, "replayed batch never committed"
-        time.sleep(1)
-    q2.stop()
+    assert q2.awaitTermination(180), "availableNow restart did not finish"
+    assert os.path.exists(os.path.join(ckpt, "commits", str(last)))
     replayed = spark.read.parquet(out)
     assert replayed.count() == n_before
     assert {
