@@ -148,8 +148,8 @@ def get_spark(
         # executor side, which single-JVM local[*] masks (its workers
         # inherit the driver's sys.path). Found by the round-12
         # local-cluster sweep: ModuleNotFoundError on the first
-        # mapInPandas stage. Ship the package parent on the executor
-        # PYTHONPATH here; a real cluster deploy uses --py-files or a
+        # mapInPandas stage. The package parent rides the executor
+        # PYTHONPATH (below); a real cluster deploy uses --py-files or a
         # pip-installed wheel on the workers (SCALE.md §49).
     if shuffle_partitions is None:
         # Local rig: match core count. Partition-count A/B tests at
@@ -162,7 +162,20 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(DEFAULT_CONF)
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if master.startswith("local-cluster"):
+    if master.startswith("local"):
+        # Python workers start from pyworker, which drops Spark's
+        # pyspark.zip (and the py4j zip and core jar) from their path when
+        # this interpreter holds the same pyspark: otherwise every task's
+        # importlib.invalidate_caches() re-reads the zip's directory once
+        # per package, most of a small Python task's CPU. Spark's default
+        # daemon comes back with
+        # extra_conf={"spark.python.daemon.module": "pyspark.daemon"}.
+        conf.setdefault(
+            "spark.python.daemon.module", "aws_imdb_data_pipeline_spark.pyworker"
+        )
+        # The daemon module, and pandas-UDF closures pickled by module
+        # reference, must import from the package parent wherever the
+        # worker starts.
         pkg_parent = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
@@ -171,7 +184,6 @@ def get_spark(
             "spark.executorEnv.PYTHONPATH",
             pkg_parent + (os.pathsep + prior if prior else ""),
         )
-    if master.startswith("local"):
         # Local mode runs every executor thread inside the driver JVM,
         # whose default 1g heap OOMs 32 concurrent tasks long before
         # the host's RAM is touched (measured: pair-explode at N=16k

@@ -100,8 +100,8 @@ def catalog_table_name(sf_dir: str, name: str) -> str | None:
 
 
 # Resolved-relation memo: (applicationId, lake path, table, catalog
-# name) -> the lazy DataFrame. spark.read.parquet re-lists the
-# directory and re-reads a footer for schema inference on EVERY call —
+# name, layout stat) -> the lazy DataFrame. spark.read.parquet re-lists
+# the directory and re-reads a footer for schema inference on EVERY call —
 # pure driver-side latency paid once per table per query construction
 # (~20-50 ms quiet-host, and the registry constructs each query fresh
 # per evaluation). Spark's own SessionCatalog caches the resolved
@@ -110,8 +110,9 @@ def catalog_table_name(sf_dir: str, name: str) -> str | None:
 # every evaluation still scans parquet. Keyed by applicationId so a
 # stopped/recreated context never sees another context's plans, and by
 # catalog name so register_lake_catalog() naturally invalidates the
-# path-mode entry. clear_table_cache() for code that rewrites a lake
-# dir in place within one application (no shipped path does).
+# path-mode entry. The layout stat (mtime_ns, size of the table's file
+# or dir) misses on a table rewritten in place, whose memoized scan
+# would list deleted files.
 _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -137,11 +138,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # engines treat these naive parquet timestamps).
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     cat = catalog_table_name(sf_dir, name)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+        layout = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        layout = None
     key = (
         spark.sparkContext.applicationId,
         os.path.abspath(sf_dir),
         name,
         cat,
+        layout,
     )
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
@@ -149,7 +157,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cat is not None:
         df = spark.table(cat)
     else:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = spark.read.parquet(path)
     for col in _NANOS_TS_COLS.get(name, ()):
         if col not in df.columns:
             continue

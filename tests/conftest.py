@@ -21,6 +21,27 @@ def spark():
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _restore_session_conf(request):
+    """Undo the runtime SQL conf a test leaves on the shared session, so
+    each test sees the session built above, as when run alone. A test
+    that calls get_spark() again (bench.main does) re-applies that
+    call's defaults, e.g. spark.sql.shuffle.partitions."""
+    if "spark" not in request.fixturenames:
+        yield
+        return
+    conf = request.getfixturevalue("spark").conf
+    before = conf.getAll
+    yield
+    after = conf.getAll
+    for key in after.keys() - before.keys():
+        if conf.isModifiable(key):
+            conf.unset(key)
+    for key, value in before.items():
+        if after.get(key) != value and conf.isModifiable(key):
+            conf.set(key, value)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

@@ -29,7 +29,6 @@ from aws_imdb_data_pipeline_spark.extensions.retrieval import (
     bm25_topk,
 )
 from aws_imdb_data_pipeline_spark.extensions.tokenindex import token_stats
-from aws_imdb_data_pipeline_spark.sources import tables
 from tests.driver_paths import THRESHOLD
 
 BASE = " ".join(f"w{i}" for i in range(30))
@@ -255,12 +254,10 @@ def test_bm25_driver_path_job_floor_and_memo(spark, tmp_path, monkeypatch):
     assert (jobs, opening) == (1, 0)
     assert again == first
 
-    # rewrite the corpus: the artifact is rebuilt in place (load_table's
-    # memoized scan of the old files is dropped first)
+    # rewrite the corpus: the artifact is rebuilt in place
     docs.filter("doc_id % 2 = 1").coalesce(1).write.mode("overwrite").parquet(
         f"{sf}/documents.parquet"
     )
-    monkeypatch.setattr(tables, "_TABLE_CACHE", {})
     fresh, jobs, _ = call()
     assert jobs == 3
     assert fresh != first

@@ -356,6 +356,20 @@ def test_load_table_memoizes_relation_per_application(spark, sf_dir):
     assert dict(e1.dtypes)["ts"] == "timestamp"
 
 
+def test_load_table_reads_a_table_rewritten_in_place(spark, tmp_path):
+    """A table overwritten within one application is read afresh: the
+    memoized scan of the old files is not reused."""
+    from aws_imdb_data_pipeline_spark.sources.tables import load_table
+
+    sf = str(tmp_path)
+    path = os.path.join(sf, "nation.parquet")
+    spark.range(3).coalesce(1).write.parquet(path)
+    assert sorted(r.id for r in load_table(spark, sf, "nation").collect()) == [0, 1, 2]
+    spark.range(10, 14).coalesce(1).write.mode("overwrite").parquet(path)
+    rows = load_table(spark, sf, "nation").collect()
+    assert sorted(r.id for r in rows) == [10, 11, 12, 13]
+
+
 def test_table_rows_matches_count(spark, sf_dir):
     """table_rows reads parquet footer metadata — exact by format
     contract, so it must equal COUNT(*) over the scan for every lake
